@@ -25,9 +25,10 @@ from __future__ import annotations
 import importlib
 
 #: Exposed as a constant so tests can verify every name actually
-#: imports — the loop below degrades to the stock daemon on ANY
-#: failure, so a typo'd module name would otherwise silently lose its
-#: preload (and the per-fork import tax would quietly return).
+#: imports — the loop below skips any module whose import fails (the
+#: others still preload), so a typo'd module name would otherwise
+#: silently lose its preload (and its per-fork import tax would quietly
+#: return).
 PRELOAD_MODULES = (
     "numpy",
     "pandas",
@@ -71,7 +72,7 @@ PRELOAD_MODULES = (
 for _mod in PRELOAD_MODULES:
     try:  # pragma: no cover - import side effect only
         importlib.import_module(_mod)
-    except Exception:  # noqa: BLE001 - any failure => stock behavior
+    except Exception:  # noqa: BLE001 - skip only this module
         pass
 
 from pyspark.daemon import manager  # noqa: E402

@@ -24,12 +24,26 @@ Scale: the fetch stage is opaque to Catalyst, so ALL manifest-level
 filtering happens before it; content never leaves executors; the sink
 layout gives partition pruning; sink_state stays a compact (name,size,
 mtime) table that broadcast-joins against new arrivals.
+
+Staging: the dataflow forks twice, and each fork is staged once with
+``localCheckpoint`` so the actions behind it read staged rows instead of
+re-running the lineage. ``split_verified`` stages the fetched rows (the
+fork into ``ok`` and ``quarantine``); ``dedup_against_sink`` stages the
+deduplicated records (the common input of ``finalize`` -> ``write_sink``,
+the blob upload and its probe). One cycle therefore fetches every file,
+explodes every archive and broadcasts the sink state exactly once, and
+the parquet sink, the quarantine and the blob store all see the SAME
+bytes even when a remote file changes mid-cycle. The trade-off: staged
+blocks live on the executors, so a lost executor fails the cycle instead
+of re-fetching. The dedup-skip makes a re-run idempotent, like the
+reference's cron re-run (README.md:106-119). ``fetch`` alone stays lazy.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import uuid
 import zipfile
 from collections.abc import Iterator
 
@@ -212,7 +226,11 @@ def fetch(
 def split_verified(fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Integrity gate (A9 child.py:83-88): size must equal the pre-stat
     expectation and the fetch must be error-free. Failures become the
-    quarantine stream (A21/A23) — a DataFrame, not a side-channel log."""
+    quarantine stream (A21/A23) — a DataFrame, not a side-channel log.
+
+    ``fetched`` is staged once here: both outputs read the staged rows,
+    so the fetch runs once however many actions consume them."""
+    fetched = fetched.localCheckpoint()
     ok_cond = F.col("error").isNull() & (F.col("length") == F.col("expected_length"))
     ok = fetched.where(ok_cond).drop("expected_length", "error")
     quarantine = fetched.where(~ok_cond | F.col("error").isNotNull()).select(
@@ -304,21 +322,27 @@ def dedup_against_sink(
     modified_time). policy='skip' = A17 (scrap/child_otherftp.py:280-298):
     drop already-uploaded files (left anti join). policy='rename' = A16
     (child.py:174-191): keep both, newcomer renamed {base}_{mtime}{ext}.
-    sink_state is small (one row per uploaded object) -> broadcast join."""
+    sink_state is small (one row per uploaded object) -> broadcast join.
+
+    The result is staged (localCheckpoint): it feeds the parquet sink, the
+    blob upload and the blob probe, which then share one explode and one
+    broadcast."""
     keys = ["file_name", "length", "modified_time"]
     state = F.broadcast(sink_state.select(*keys).dropDuplicates(keys))
     if policy == "skip":
-        return df.join(state, on=keys, how="left_anti")
-    if policy == "rename":
+        deduped = df.join(state, on=keys, how="left_anti")
+    elif policy == "rename":
         hit = state.withColumn("_dup", F.lit(True))
         joined = df.join(hit, on=keys, how="left")
         base = F.regexp_replace("file_name", r"\.[^.]*$", "")
         ext = F.regexp_extract("file_name", r"(\.[^.]*)$", 1)
         renamed = F.concat(base, F.lit("_"), F.col("modified_time").cast("string"), ext)
-        return joined.withColumn(
+        deduped = joined.withColumn(
             "file_name", F.when(F.col("_dup"), renamed).otherwise(F.col("file_name"))
         ).drop("_dup")
-    raise ValueError(f"unknown dedup policy {policy!r}")
+    else:
+        raise ValueError(f"unknown dedup policy {policy!r}")
+    return deduped.localCheckpoint()
 
 
 def finalize(df: DataFrame) -> DataFrame:
@@ -357,11 +381,14 @@ def run_pipeline(
     fetcher: Fetcher | None = None,
     concurrency: int = 1,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full pipeline -> (final_records, quarantine). Lazy end to end: one
-    job materializes everything when the caller acts. ``fetcher`` swaps
-    the protocol client (netfetch.FtplibFetcher/CurlFetcher for real
-    servers); default is the local-fixture fetcher. ``concurrency`` > 1
-    overlaps stat+read inside each task (A5, see make_fetch_stage)."""
+    """Full pipeline -> (final_records, quarantine). Staged at its two
+    forks (module docstring, "Staging"): the fetch, the explode and the
+    dedup join run here, once each, and the caller's actions read the
+    staged rows; a lost executor fails the cycle rather than re-fetching.
+    ``fetcher`` swaps the protocol client (netfetch.FtplibFetcher/
+    CurlFetcher for real servers); default is the local-fixture fetcher.
+    ``concurrency`` > 1 overlaps stat+read inside each task (A5, see
+    make_fetch_stage)."""
     fixtures.build()
     fetched = fetch(spark, manifest, fetcher=fetcher, concurrency=concurrency)
     ok, quarantine = split_verified(fetched)
@@ -436,13 +463,17 @@ def write_blob_sink(df: DataFrame, sink_root: str) -> DataFrame:
     import os
 
     def upload(rows) -> None:
+        # Each blob is written whole under a unique temp name and renamed
+        # onto its path: records that share a path (same basename in two
+        # directories) leave one record's complete bytes, never a mix.
         for r in rows:
             d = os.path.join(sink_root, r["server_folder"], r["file_type"])
             os.makedirs(d, exist_ok=True)
-            p = os.path.join(d, r["file_name"])
-            with open(p, "wb") as f:
+            tmp = os.path.join(d, f".upload-{uuid.uuid4().hex}")
+            with open(tmp, "xb") as f:
                 f.write(bytes(r["content"] or b""))
-            os.utime(p, (r["modified_time"], r["modified_time"]))
+            os.utime(tmp, (r["modified_time"], r["modified_time"]))
+            os.replace(tmp, os.path.join(d, r["file_name"]))
 
     df.select(
         "server_folder", "file_type", "file_name", "content", "modified_time"

@@ -360,9 +360,11 @@ def ingest_blob_store_policies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale/determinism: uploads run executor-side (one store client per
     partition, the Fetcher-seam convention); result frames are one row
-    per OBJECT (manifest-bounded, the sink_state shape), localCheckpoint
-    pins round ordering; the rename suffix is the record's mtime, so a
-    retried task reproduces the identical blob path."""
+    per OBJECT (manifest-bounded, the sink_state shape); the record frame
+    is staged by dedup_against_sink, so the three rounds share one fetch,
+    and each round's own localCheckpoint pins round ordering; the rename
+    suffix is the record's mtime, so a retried task reproduces the
+    identical blob path."""
     import functools
     import os
     import tempfile
@@ -383,14 +385,9 @@ def ingest_blob_store_policies(spark: SparkSession, sf_dir: str) -> DataFrame:
     ok, _quarantine = split_verified(fetched)
     exploded = ok.mapInPandas(explode_archives, schema=EXPLODED_SCHEMA)
     derived = derive_columns(exploded)
-    # r15: the three upload rounds each consumed the lazy pipeline, so
-    # fetch -> explode_archives (Python) -> derive -> dedup executed
-    # THREE times; one localCheckpoint materializes the manifest-bounded
-    # record frame once and the rounds re-read it (round ordering still
-    # pinned by each round's own eager checkpoint below).
     records = dedup_against_sink(
         derived, spark.createDataFrame([], SINK_STATE_SCHEMA), "skip"
-    ).localCheckpoint()
+    )
     root = os.path.join(
         tempfile.gettempdir(), f"dip_blob_store_{uuid.uuid4().hex[:8]}"
     )

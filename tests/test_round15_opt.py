@@ -224,9 +224,11 @@ def test_daemon_preload_modules_all_import():
     ship by reference in UDF closures (r15: _topk_ids_tiled pickles as
     (module, qualname), so a fresh forked worker re-imports ~0.8 s of
     engine modules on its first kernel task — measured 4x on
-    embed_hubness_ivf's cell stage). The preload loop swallows import
-    errors by design (stock-daemon degradation), so this test is the
-    only thing that catches a typo'd or bit-rotted module name."""
+    embed_hubness_ivf's cell stage). The preload loop skips a module
+    whose import fails by design, so this test is the only thing that
+    catches a typo'd or bit-rotted module name. It imports the modules in
+    the driver's environment only; an executor whose Python environment
+    lacks one of them still skips it silently."""
     import importlib
 
     from data_ingestion_poc_spark.daemon_preload import PRELOAD_MODULES
