@@ -111,31 +111,6 @@ def _verdict_rounds() -> dict[str, int]:
     return last
 
 
-#: Names first registered THIS round (r14). Window math is asserted at
-#: round close by committing the PREDICTED first-50 window (BASELINE
-#: "r14 window bookkeeping") so the CORRECTNESS_r14 diff is mechanical
-#: (VERDICT r13 item 2).
-_NEW_THIS_ROUND: set[str] = {
-    # Batch A: method agreement + moment/scale screens.
-    "agg_deming_regression",
-    "agg_bland_altman",
-    "agg_bimodality_coefficient",
-    "agg_cochran_c",
-    "agg_hartley_fmax",
-    "agg_gini_mean_difference",
-    # Batch B: ordinal-association companions to kendall_tau.
-    "agg_gk_gamma",
-    "agg_stuart_tau_c",
-    "agg_blomqvist_beta",
-    # Exhibits (VERDICT r13 item 5's named gaps + the dedup-ladder
-    # character-level member).
-    "dedup_edit_distance",
-    "win_pattern_varlen",
-    "scan_variant_shred",
-    "stream_state_reader",
-}
-
-
 def _ordered() -> dict[str, registry.Query]:
     all_q = registry.all_queries()
     verdicts = _verdict_rounds()
@@ -146,14 +121,8 @@ def _ordered() -> dict[str, registry.Query]:
     # value-oracled before rows-only, registration order within each.
     fresh = [n for n in all_q if n not in seen and n not in verdicts]
     reg_index = {n: i for i, n in enumerate(all_q)}
-    fresh_oracle = sorted(
-        (n for n in fresh if all_q[n].oracle),
-        key=lambda n: (n in _NEW_THIS_ROUND, reg_index[n]),
-    )
-    fresh_rows_only = sorted(
-        (n for n in fresh if not all_q[n].oracle),
-        key=lambda n: (n in _NEW_THIS_ROUND, reg_index[n]),
-    )
+    fresh_oracle = [n for n in fresh if all_q[n].oracle]
+    fresh_rows_only = [n for n in fresh if not all_q[n].oracle]
     changed_judged = [
         n for n in _CHANGED_JUDGED_THIS_ROUND if n in all_q and n not in seen
     ]

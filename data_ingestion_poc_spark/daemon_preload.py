@@ -41,7 +41,7 @@ PRELOAD_MODULES = (
     # r15: engine modules whose module-level kernel helpers ship BY
     # REFERENCE in UDF closures (cloudpickle pickles a module-global
     # function of an importable module as (module, qualname), not by
-    # value — e.g. _topk_ids_tiled inside the hubness/NSW cell
+    # value — e.g. dedup._topk_ids_tiled inside the hubness/NSW cell
     # kernels). Without preloading, EVERY forked worker re-imports
     # ~0.8 s of engine+pyspark.sql modules on its first such task —
     # measured 4x on embed_hubness_ivf's cell stage (314 ms -> 1.3 s

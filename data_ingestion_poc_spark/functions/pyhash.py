@@ -131,11 +131,6 @@ def xxh64_int(value: int, seed: int) -> int:
     return h
 
 
-def xxh64_signed(data: bytes, seed: int = 42) -> int:
-    """xxh64 but accepting/propagating Spark's signed-long seeds."""
-    return xxh64(data, seed & _M64)
-
-
 def murmur3_long(value: int, seed: int) -> int:
     """Murmur3_x86_32.hashLong: the long is hashed as its low then high
     32-bit halves, fmix'd with length 8. Returns the signed int32."""

@@ -915,20 +915,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Spark and DuckDB then agree exactly, LSH misses included.
 _EMB_BANDS, _EMB_BITS, _EMB_DIM = 8, 4, 64
 
-#: Tile edge for the fused pair kernels (r15, VERDICT r14 item 2 /
-#: guide §5). The r14 kernels materialized one dense (n, n) cosine
-#: matrix per LSH bucket / IVF cell inside a single Python worker —
-#: bits-per-band bounds occupancy only RELATIVE to the corpus (N/16
-#: per 4-bit band), so at corpus scale the dense matrix is a Python
-#: worker OOM even though the pair SPACE is the contract. Tiling the
-#: accumulation into (tile x tile) blocks caps kernel memory at
-#: O(tile^2 + n*dim) while leaving every double bit-identical: each
-#: C[i, j] is still the same ((0+a0*b0)+a1*b1)+... per-dimension left
-#: fold, computed from the same operands in the same order — the tile
-#: boundary only changes WHICH (i, j) cells are resident together,
-#: never an element's fold. 2048^2 doubles = 32 MB resident per block.
-_PAIR_TILE = 2048
-
 
 def _emb_plane_signs(plane: int) -> list[float]:
     return [1.0 if _splitmix_bit(plane, i) else -1.0 for i in range(_EMB_DIM)]
@@ -983,6 +969,140 @@ def dot_double(a, b):
     )
 
 
+#: Tile edge of the shared cosine kernel below, the one place every
+#: NumPy cosine in the engine is computed. Its single invariant keeps
+#: the DuckDB oracles exact: each dot product is dot_double's left fold
+#: ((0+a0*b0)+a1*b1)+... over the dimensions, from the same double
+#: operands in the same order (a product may commute, the adds never
+#: reorder), and a cosine divides it by the product of the two norms.
+#: Tiling into (tile x tile) blocks caps kernel memory at
+#: O(tile^2 + n*dim) — a dense (n, n) matrix per LSH bucket or IVF cell
+#: is a Python-worker OOM at corpus scale — and changes only WHICH cells
+#: are resident together, never a cell's fold, so every reducer's output
+#: is bit-identical at any tile. 2048^2 doubles = 32 MB per block.
+#: Kernel closures read this name on the driver and pass the value in
+#: (a module global read inside a Python worker would be the imported
+#: value, not the session's — and tests shrink it to force multi-block
+#: runs).
+_PAIR_TILE = 2048
+
+
+def row_norms(V):
+    """Per-row L2 norms of V, squares summed in dot_double's order."""
+    import numpy as np
+
+    nsq = np.zeros(len(V))
+    for d in range(V.shape[1]):
+        col = V[:, d]
+        nsq = nsq + col * col
+    return np.sqrt(nsq)
+
+
+def _dot_fold(A, B):
+    """The (len(A), len(B)) block of row dot products, folded per
+    dimension (see _PAIR_TILE)."""
+    import numpy as np
+
+    acc = np.zeros((len(A), len(B)))
+    for d in range(A.shape[1]):
+        acc = acc + np.outer(A[:, d], B[:, d])
+    return acc
+
+
+def _dot_blocks(A, B, tile, tri=0):
+    """Walk A x B in (tile x tile) blocks, yielding (rows, cols, acc):
+    two slices and the raw _dot_fold block. Row blocks ascend, and the
+    column blocks ascend within each. With tri = +1 / -1 (A is B) only
+    the blocks on or above / on or below the diagonal are walked."""
+    for i0 in range(0, len(A), tile):
+        si = slice(i0, min(i0 + tile, len(A)))
+        lo = i0 if tri > 0 else 0
+        hi = si.stop if tri < 0 else len(B)
+        for j0 in range(lo, hi, tile):
+            sj = slice(j0, min(j0 + tile, len(B)))
+            yield si, sj, _dot_fold(A[si], B[sj])
+
+
+def _cos_blocks(A, B, na, nb, tile, tri=0):
+    """_dot_blocks as cosines acc / (na * nb). With tri, the diagonal
+    block's cells outside the strict upper (j > i) / lower (j < i)
+    triangle read -inf, so no reducer picks them."""
+    import numpy as np
+
+    for si, sj, acc in _dot_blocks(A, B, tile, tri):
+        C = acc / (na[si, None] * nb[None, sj])
+        if tri and si == sj:
+            band = np.triu if tri > 0 else np.tril
+            C = np.where(band(np.ones(C.shape, dtype=bool), k=tri), C, -np.inf)
+        yield si, sj, C
+
+
+def _topk_ids_tiled(ids, V, nrm, k, tile):
+    """Per-row top-k neighbor ids by (cosine DESC, id ASC), self
+    excluded — the row_number() window the cell kernels replay. Each
+    row keeps a running top-(k+1) buffer that every block merges into
+    (REPOSE's local-top-k-then-merge): the merge is exact under the
+    TOTAL order (cos DESC, id ASC) because ids are unique, so
+    top-m(top-m(S) ∪ B) = top-m(S ∪ B). One slot is reserved for self,
+    which is dropped before the cut.
+
+    Returns a list of np.int64 arrays, one per row of `ids`, each in
+    rank order. Asserts nrm > 0: a zero-norm vector's NaN cosines would
+    silently rank LAST here while the SQL window the kernel replays
+    ranks NaN first — fail loudly instead."""
+    import numpy as np
+
+    assert nrm.min() > 0.0, "zero-norm embedding in cell kernel"
+    m = k + 1
+    buf_cos = np.full((len(ids), m), -np.inf)
+    buf_ids = np.full((len(ids), m), np.iinfo(np.int64).max, dtype=np.int64)
+    for si, sj, C in _cos_blocks(V, V, nrm, nrm, tile):
+        cand_cos = np.concatenate([buf_cos[si], C], axis=1)
+        cand_ids = np.concatenate(
+            [buf_ids[si], np.broadcast_to(ids[sj], C.shape)], axis=1
+        )
+        for r in range(len(C)):
+            sel = np.lexsort((cand_ids[r], -cand_cos[r]))[:m]
+            buf_cos[si.start + r] = cand_cos[r][sel]
+            buf_ids[si.start + r] = cand_ids[r][sel]
+    return [
+        row[(row != i) & (cos > -np.inf)][:k]
+        for i, row, cos in zip(ids, buf_ids, buf_cos)
+    ]
+
+
+def _argmax_ids_tiled(A, B, na, nb, ids, tile, tri=0):
+    """Per-row (best cosine, its id) over B, whose `ids` ascend. The
+    first max within a block is the smallest id, and a later block
+    replaces only on a STRICTLY greater cosine, so equal cosines keep
+    the smaller id — max_by((cos, -id)). A row with no candidate keeps
+    (-inf, 0). Asserts na > 0 (see _topk_ids_tiled)."""
+    import numpy as np
+
+    assert na.min() > 0.0, "zero-norm embedding in cell kernel"
+    best_cos = np.full(len(A), -np.inf)
+    best_id = np.zeros(len(A), dtype=np.int64)
+    for si, sj, C in _cos_blocks(A, B, na, nb, tile, tri):
+        arg = np.argmax(C, axis=1)
+        top = C[np.arange(len(C)), arg]
+        cos, best = best_cos[si], best_id[si]  # views into the outputs
+        take = top > cos
+        cos[take] = top[take]
+        best[take] = ids[sj][arg[take]]
+    return best_cos, best_id
+
+
+def _threshold_cells(blocks, cut):
+    """Yield (i, j, cos) arrays of every cell with cos >= cut, block by
+    block. The walk visits each cell once, so each pair is emitted once."""
+    import numpy as np
+
+    for si, sj, C in blocks:
+        bi, bj = np.nonzero(C >= cut)
+        if bi.size:
+            yield si.start + bi, sj.start + bj, C[bi, bj]
+
+
 def _emb_band_key_col(band: int):
     """Spark Column: band `band`'s _EMB_BITS-bit sign key over `embedding`
     (identical planes/arithmetic to the SQL oracle's literals)."""
@@ -1033,9 +1153,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ran one interpreted 64-term HOF fold per pair. The bucket kernel
     sees each (band, key) group once with its vectors attached (8x
     corpus rows moved, embeddings never join pair-wise) and computes
-    the bucket's all-pairs cosines with per-dimension accumulation —
-    the same ((0+a0*b0)+a1*b1)+... left fold dot_double spells, so
-    every cosine is bit-identical to the SQL fold the DuckDB oracle
+    the bucket's all-pairs cosines with the shared kernel (_PAIR_TILE),
+    so every cosine is bit-identical to the SQL fold the DuckDB oracle
     replays (verified at 3 SFs). Pair space per bucket is unchanged
     from the equi-join (within-bucket all-pairs, bounded by
     bits-per-band); a pair caught by k bands computes k identical
@@ -1063,12 +1182,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat = vcol.flatten().to_numpy(zero_copy_only=False).astype(
                 np.float64
             )
-            V = flat.reshape(n, -1)
-            # per-dim left fold of x*sign — dot_double's exact order
-            proj = np.zeros((n, _EMB_BANDS * _EMB_BITS))
-            for d in range(V.shape[1]):
-                proj = proj + V[:, d][:, None] * H[d][None, :]
-            pos = proj > 0
+            pos = _dot_fold(flat.reshape(n, -1), H.T) > 0
             keys = np.zeros((n, _EMB_BANDS), dtype=np.int32)
             for bnd in range(_EMB_BANDS):
                 for j in range(_EMB_BITS):
@@ -1095,70 +1209,34 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         _band_keys,
         "vec_id long, embedding array<float>, band int, key int",
     )
-    # captured driver-side so the kernel closure carries the value (a
-    # module-global read inside the Python worker would be re-imported,
-    # not the session's — and tests shrink it to force multi-block runs)
     tile = _PAIR_TILE
 
     def _bucket_pairs(pdf):
         import pandas as pd
 
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-            )
+        empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
+            {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
+        )
+        if len(pdf) < 2:
+            return empty
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         V = np.stack(
             [np.asarray(x, dtype=np.float64) for x in pdf["embedding"]]
         )
-        nsq = np.zeros(n)
-        for d in range(V.shape[1]):
-            col = V[:, d]
-            nsq = nsq + col * col
-        nrm = np.sqrt(nsq)
+        nrm = row_norms(V)
         # zero-norm vectors would put NaN where the pre-r14 SQL plan
         # ordered NaN largest — fail loudly instead of silently
         # diverging from the oracle (r14 ADVICE).
         assert nrm.min() > 0.0, "zero-norm embedding in LSH bucket"
-        # r15 (VERDICT r14 item 2): upper-triangle pairs in
-        # (_PAIR_TILE x _PAIR_TILE) blocks — same per-dimension fold
-        # per element, O(tile^2) resident instead of O(n^2).
-        out_a, out_b, out_c = [], [], []
-        for i0 in range(0, n, tile):
-            i1 = min(i0 + tile, n)
-            for j0 in range(i0, n, tile):
-                j1 = min(j0 + tile, n)
-                acc = np.zeros((i1 - i0, j1 - j0))
-                for d in range(V.shape[1]):
-                    col = V[:, d]
-                    acc = acc + np.outer(col[i0:i1], col[j0:j1])
-                C = acc / np.outer(nrm[i0:i1], nrm[j0:j1])
-                keep = C >= 0.30
-                if j0 == i0:
-                    # diagonal block: strict upper triangle only
-                    keep &= np.triu(
-                        np.ones(C.shape, dtype=bool), k=1
-                    )
-                bi, bj = np.nonzero(keep)
-                if bi.size:
-                    out_a.append(ids[i0 + bi])
-                    out_b.append(ids[j0 + bj])
-                    out_c.append(C[bi, bj])
-        if not out_a:
-            return pd.DataFrame(
-                {"vec_a": [], "vec_b": [], "cosine": []}
-            ).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-            )
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a),
-                "vec_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
+        # strict upper triangle: each within-bucket pair once, vec_a < vec_b
+        cells = list(
+            _threshold_cells(_cos_blocks(V, V, nrm, nrm, tile, tri=1), 0.30)
         )
+        if not cells:
+            return empty
+        i, j, cos = (np.concatenate(x) for x in zip(*cells))
+        return pd.DataFrame({"vec_a": ids[i], "vec_b": ids[j], "cosine": cos})
 
     pairs = (
         keyed.groupBy("band", "key")
@@ -1589,15 +1667,14 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r14 second pass (guide §4.2, the dedup_embedding bucket recipe):
     # the within-cell pair join + per-vector best-duplicate window run
-    # as ONE per-cell NumPy kernel — cosines accumulate per dimension
-    # (dot_double's exact left fold, multiplies commuted only; na*nb =
-    # outer(nrm, nrm)), the >= TAU cut and the (cos DESC, earlier_id)
-    # pick see bit-identical doubles, so the DuckDB oracle replay is
+    # as ONE per-cell NumPy kernel on the shared cosine kernel
+    # (_PAIR_TILE), so the >= TAU cut and the (cos DESC, earlier_id)
+    # pick see bit-identical doubles and the DuckDB oracle replay is
     # unchanged (re-verified at 3 SFs). Pair space per cell is the
     # identical within-cell all-pairs the equi-join materialized.
     import numpy as np
 
-    tile = _PAIR_TILE  # driver-side capture; see dedup_embedding_cosine
+    tile = _PAIR_TILE
 
     def _cell_dups(pdf):
         import pandas as pd
@@ -1605,59 +1682,21 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         empty = pd.DataFrame(
             {"vec_id": [], "earlier_id": [], "cos": []}
         ).astype({"vec_id": "int64", "earlier_id": "int64", "cos": "float64"})
-        n = len(pdf)
-        if n < 2:
+        if len(pdf) < 2:
             return empty
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         V = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
         nrm = pdf["nrm"].to_numpy()
-        assert nrm.min() > 0.0, "zero-norm embedding in semantic cell"
-        # r15 (VERDICT r14 item 2): the dense (n, n) matrix becomes a
-        # tiled scan with a RUNNING best per row. Each C[i, j] keeps
-        # dot_double's per-dimension left fold (identical doubles); the
-        # winner rule — row_number() over (cos DESC, earlier_id ASC) —
-        # is replayed exactly because j-blocks are scanned in ascending
-        # id order and a later candidate replaces only on STRICTLY
-        # greater cos (equal cos keeps the earlier, smaller id).
-        out_v, out_e, out_c = [], [], []
-        for i0 in range(1, n, tile):
-            i1 = min(i0 + tile, n)
-            bi = i1 - i0
-            best_cos = np.full(bi, -np.inf)
-            best_id = np.zeros(bi, dtype=np.int64)
-            for j0 in range(0, i1, tile):
-                j1 = min(j0 + tile, i1)
-                acc = np.zeros((bi, j1 - j0))
-                for d in range(V.shape[1]):
-                    col = V[:, d]
-                    acc = acc + np.outer(col[i0:i1], col[j0:j1])
-                C = acc / np.outer(nrm[i0:i1], nrm[j0:j1])
-                # earlier-only: global j < global i, plus the TAU cut
-                gi = np.arange(i0, i1)[:, None]
-                gj = np.arange(j0, j1)[None, :]
-                C = np.where((gj < gi) & (C >= SEMDEDUP_TAU), C, -np.inf)
-                blk_arg = np.argmax(C, axis=1)
-                blk_max = C[np.arange(bi), blk_arg]
-                # within a block argmax's first-max IS the smallest id
-                # (ids ascending); across blocks strict > keeps ties on
-                # the earlier block's smaller id
-                take = blk_max > best_cos
-                best_cos[take] = blk_max[take]
-                best_id[take] = ids[j0 + blk_arg[take]]
-            hit = best_cos > -np.inf
-            out_v.append(ids[i0:i1][hit])
-            out_e.append(best_id[hit])
-            out_c.append(best_cos[hit])
-        out_v = np.concatenate(out_v) if out_v else np.array([], dtype=np.int64)
-        if out_v.size == 0:
+        # earlier ids only (tri=-1); row_number() over (cos DESC,
+        # earlier_id ASC) is the first max, and it clears the TAU cut
+        # iff some earlier cell does
+        cos, earlier = _argmax_ids_tiled(V, V, nrm, nrm, ids, tile, tri=-1)
+        hit = cos >= SEMDEDUP_TAU
+        if not hit.any():
             return empty
         return pd.DataFrame(
-            {
-                "vec_id": out_v,
-                "earlier_id": np.concatenate(out_e),
-                "cos": np.concatenate(out_c),
-            }
+            {"vec_id": ids[hit], "earlier_id": earlier[hit], "cos": cos[hit]}
         )
 
     dup = assigned.groupBy("cell").applyInPandas(

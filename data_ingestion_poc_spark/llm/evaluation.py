@@ -243,10 +243,10 @@ def dedup_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 second pass (guide §4.2): the anchors x corpus fold stream is
     # a NumPy kernel — anchors (with their SQL-folded inverse norms)
     # ride the closure, the same scale class as the F.broadcast(a) it
-    # replaces; dots accumulate per dimension (dot_double's exact left
-    # fold, multiplies commuted only) and cos spells ((dot*inva)*invb)
-    # in the same order, so the >= 0.30 cut sees bit-identical doubles
-    # (full-pipeline DuckDB oracle re-verified at 3 SFs).
+    # replaces; dots come from the shared fold (dedup._PAIR_TILE) and
+    # cos spells ((dot*inva)*invb) in the same order, so the >= 0.30 cut
+    # sees bit-identical doubles (full-pipeline DuckDB oracle re-verified
+    # at 3 SFs).
     a = a.withColumn("inva", 1.0 / F.sqrt(dot_double(F.col("ea"), F.col("ea"))))
     a_rows = a.collect()
     # r15 (r14 ADVICE): the anchor matrix rides a TorrentBroadcast, not
@@ -261,9 +261,9 @@ def dedup_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     del a_rows
-    from .dedup import _PAIR_TILE
+    from .dedup import _PAIR_TILE, _dot_blocks, _threshold_cells, row_norms
 
-    tile = _PAIR_TILE  # driver-side capture: the closure pickles it
+    tile = _PAIR_TILE
 
     def _exact_pairs(batches):
         import pyarrow as pa
@@ -280,31 +280,26 @@ def dedup_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .astype(np.float64)
             )
             V = flat.reshape(n, -1)
-            nsq = np.zeros(n)
-            for d in range(V.shape[1]):
-                col = V[:, d]
-                nsq = nsq + col * col
-            invb = 1.0 / np.sqrt(nsq)
+            invb = 1.0 / row_norms(V)
             ids_b = batch.column("vec_b").to_numpy()
-            # r15 (VERDICT r14 item 2): the anchor axis scales with the
-            # corpus — tile it so the resident slab is (batch x tile),
-            # not (batch x anchors). Per-dimension fold per element is
-            # unchanged; every qualifying pair is emitted exactly once
-            # (blocks partition the anchor axis).
-            for a0 in range(0, len(a_ids), tile):
-                a1 = min(a0 + tile, len(a_ids))
-                acc = np.zeros((n, a1 - a0))
-                for d in range(V.shape[1]):
-                    acc = acc + V[:, d][:, None] * A[a0:a1, d][None, :]
-                cos = (acc * a_inv[None, a0:a1]) * invb[:, None]
-                bi, ai = np.where(
-                    (cos >= 0.30) & (a_ids[None, a0:a1] < ids_b[:, None])
+            # anchor axis walked in tiles; earlier anchors only, and this
+            # site's own normalisation (acc * inva) * invb
+            blocks = (
+                (
+                    si,
+                    sj,
+                    np.where(
+                        a_ids[None, sj] < ids_b[si, None],
+                        (acc * a_inv[None, sj]) * invb[si, None],
+                        -np.inf,
+                    ),
                 )
-                if bi.size == 0:
-                    continue
+                for si, sj, acc in _dot_blocks(V, A, tile)
+            )
+            for bi, ai, _ in _threshold_cells(blocks, 0.30):
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(a_ids[a0 + ai], type=pa.int64()),
+                        pa.array(a_ids[ai], type=pa.int64()),
                         pa.array(ids_b[bi], type=pa.int64()),
                     ],
                     names=["vec_a", "vec_b"],

@@ -18,64 +18,18 @@ import math
 
 from ..catalog import fanout_repartition, footer_row_count, load
 from ..registry import register
-from .dedup import _PAIR_TILE, _splitmix_bit, dot_double  # noqa: F401
+from . import dedup
+from .dedup import (
+    _argmax_ids_tiled,
+    _dot_fold,
+    _splitmix_bit,
+    _topk_ids_tiled,
+    dot_double,
+    row_norms,
+)
 
 _LOG = logging.getLogger(__name__)
 
-
-def _topk_ids_tiled(ids, V, nrm, k, tile=None):
-    """Per-row top-k neighbor ids by (cosine DESC, id ASC), self
-    excluded — the row_number() window the r14 cell kernels replaced —
-    computed in (_PAIR_TILE x _PAIR_TILE) blocks so kernel memory is
-    O(tile^2), not O(cell^2) (r15, VERDICT r14 item 2: cell occupancy
-    grows with the corpus, the dense matrix was a Python-worker OOM at
-    scale). Bit-identical to the r14 dense kernel: each cosine keeps
-    dot_double's per-dimension left fold, and the running top-(k+1)
-    buffer merge is exact under the TOTAL order (cos DESC, id ASC) —
-    ids are unique, so top-m(top-m(S) ∪ B) = top-m(S ∪ B). One buffer
-    slot is reserved for self, which is dropped before the cut exactly
-    as the dense kernel's post-sort id filter did.
-
-    Returns a list of np.int64 arrays, one per row of `ids`, each in
-    rank order. Asserts nrm > 0: a zero-norm vector's NaN cosines would
-    silently rank LAST here while the SQL window the kernel replays
-    ranks NaN first (r14 ADVICE) — fail loudly instead."""
-    import numpy as np
-
-    n = len(ids)
-    assert nrm.min() > 0.0, "zero-norm embedding in cell kernel"
-    if tile is None:
-        tile = _PAIR_TILE
-    m = k + 1  # one slot for self
-    sentinel = np.iinfo(np.int64).max
-    out = []
-    for i0 in range(0, n, tile):
-        i1 = min(i0 + tile, n)
-        bi = i1 - i0
-        buf_cos = np.full((bi, m), -np.inf)
-        buf_ids = np.full((bi, m), sentinel, dtype=np.int64)
-        for j0 in range(0, n, tile):
-            j1 = min(j0 + tile, n)
-            acc = np.zeros((bi, j1 - j0))
-            for d in range(V.shape[1]):
-                col = V[:, d]
-                acc = acc + np.outer(col[i0:i1], col[j0:j1])
-            C = acc / np.outer(nrm[i0:i1], nrm[j0:j1])
-            cand_cos = np.concatenate([buf_cos, C], axis=1)
-            cand_ids = np.concatenate(
-                [buf_ids, np.broadcast_to(ids[j0:j1], (bi, j1 - j0))],
-                axis=1,
-            )
-            for r in range(bi):
-                sel = np.lexsort((cand_ids[r], -cand_cos[r]))[:m]
-                buf_cos[r] = cand_cos[r][sel]
-                buf_ids[r] = cand_ids[r][sel]
-        for r in range(bi):
-            row = buf_ids[r][
-                (buf_ids[r] != ids[i0 + r]) & (buf_cos[r] > -np.inf)
-            ]
-            out.append(row[:k])
-    return out
 
 _KNN_ORACLE = """
     WITH q AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
@@ -2567,13 +2521,12 @@ def _hubness_ivf_cells(t, n_vec: int, extra_cols: list) -> DataFrame:
     #
     # r14 second pass (guide §4.2, the _nsw_graph/dedup_embedding
     # recipe): the assignment argmax and the within-cell top-k both
-    # run as NumPy kernels that accumulate PER DIMENSION — the same
-    # ((0+a0*b0)+a1*b1)+... left fold dot_double spells, multiplies
-    # commuted only, so every cosine is bit-identical to the SQL fold
-    # the DuckDB oracle replays (re-verified at 3 SFs). Collecting the
-    # nlist seeds is the same sqrt(N) scale class as the
-    # F.broadcast(seeds) it replaces; the partition count derives from
-    # input size (§2.4), not a constant.
+    # run on the shared NumPy cosine kernel (dedup._PAIR_TILE), so
+    # every cosine is bit-identical to the SQL fold the DuckDB oracle
+    # replays (re-verified at 3 SFs). Collecting the nlist seeds is the
+    # same sqrt(N) scale class as the F.broadcast(seeds) it replaces;
+    # the partition count derives from input size (§2.4), not a
+    # constant.
     spark = t.embeddings.sparkSession
     par = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     npart = max(1, min(par, -(-n_vec // 256)))
@@ -2594,7 +2547,7 @@ def _hubness_ivf_cells(t, n_vec: int, extra_cols: list) -> DataFrame:
     cids_np = np.array([r.cid for r in seed_rows], dtype=np.int64)
     cv_np = np.array([r.cv for r in seed_rows], dtype=np.float64)
     cnrm_np = np.array([r.cnrm for r in seed_rows], dtype=np.float64)
-    tile = _PAIR_TILE  # driver-side capture: closures pickle the value
+    tile = dedup._PAIR_TILE
 
     def _assign(batches):
         import pyarrow as pa
@@ -2606,31 +2559,9 @@ def _hubness_ivf_cells(t, n_vec: int, extra_cols: list) -> DataFrame:
             vcol = batch.column("v")
             flat = vcol.flatten().to_numpy(zero_copy_only=False)
             V = flat.reshape(nb, -1)
-            nsq = np.zeros(nb)
-            for d in range(V.shape[1]):
-                col = V[:, d]
-                nsq = nsq + col * col
-            nrm = np.sqrt(nsq)
-            assert nrm.min() > 0.0, "zero-norm embedding in assign"
-            # first-max argmax == max_by((cs, -cid)) with cid ascending.
-            # r15: the centroid axis is nlist ~ sqrt(N), so the dense
-            # (batch x nlist) slab is tiled with a running argmax —
-            # within a block first-max picks the smallest cid, across
-            # ascending-cid blocks a STRICTLY greater cs replaces, so
-            # ties keep the earlier (smaller) cid exactly as before.
-            best_cs = np.full(nb, -np.inf)
-            best = np.zeros(nb, dtype=np.int64)
-            for c0 in range(0, len(cids_np), tile):
-                c1 = min(c0 + tile, len(cids_np))
-                acc = np.zeros((nb, c1 - c0))
-                for d in range(V.shape[1]):
-                    acc = acc + V[:, d][:, None] * cv_np[c0:c1, d][None, :]
-                cs = acc / (nrm[:, None] * cnrm_np[None, c0:c1])
-                blk_arg = np.argmax(cs, axis=1)
-                blk_max = cs[np.arange(nb), blk_arg]
-                take = blk_max > best_cs
-                best_cs[take] = blk_max[take]
-                best[take] = cids_np[c0 + blk_arg[take]]
+            nrm = row_norms(V)
+            # first-max argmax == max_by((cs, -cid)) with cid ascending
+            _, best = _argmax_ids_tiled(V, cv_np, nrm, cnrm_np, cids_np, tile)
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("vec_id"),
@@ -2661,8 +2592,7 @@ def _hubness_ivf_cells(t, n_vec: int, extra_cols: list) -> DataFrame:
         V = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
         nrm = pdf["nrm"].to_numpy()
         # row_number() over (ORDER BY cosine DESC, neighbor_id), self
-        # excluded, capped at HUBNESS_K — r15: tiled top-k (see
-        # _topk_ids_tiled) instead of the dense (n, n) matrix.
+        # excluded, capped at HUBNESS_K
         k = min(HUBNESS_K, n - 1)
         nbrs, rks = [], []
         for row in _topk_ids_tiled(ids, V, nrm, k, tile):
@@ -3409,21 +3339,19 @@ def _nsw_graph(t, seeds: DataFrame | None = None) -> DataFrame:
     # r14 optimization round, second pass (guide §4.2 — vectorize the
     # Python/codegen boundary): the N x sqrt(N) assignment fold and the
     # cell-local kNN fold move from interpreted HOF expression trees to
-    # NumPy kernels that accumulate PER DIMENSION, i.e. the same
-    # ((0+a0*b0)+a1*b1)+... left fold dot_double spells — every add and
-    # multiply is the same IEEE-754 double op in the same order, so
-    # every cosine is bit-identical to the SQL fold the DuckDB oracle
-    # replays (re-verified against the oracle at all 3 SFs and the
-    # pure-Python planted model). Collecting the seed layer to the
-    # driver is the same scale class as the F.broadcast(seeds) it
-    # replaces: sqrt(N) rows, sublinear by construction.
+    # the shared NumPy cosine kernel (dedup._PAIR_TILE), bit-identical
+    # to the SQL fold the DuckDB oracle replays (re-verified against the
+    # oracle at all 3 SFs and the pure-Python planted model). Collecting
+    # the seed layer to the driver is the same scale class as the
+    # F.broadcast(seeds) it replaces: sqrt(N) rows, sublinear by
+    # construction.
     seed_rows = sorted(
         seeds.select("sid", "sv", "snrm").collect(), key=lambda r: r.sid
     )
     sids_np = np.array([r.sid for r in seed_rows], dtype=np.int64)
     sv_np = np.array([r.sv for r in seed_rows], dtype=np.float64)
     snrm_np = np.array([r.snrm for r in seed_rows], dtype=np.float64)
-    tile = _PAIR_TILE  # driver-side capture: closures pickle the value
+    tile = dedup._PAIR_TILE
 
     def _assign(batches):
         import pyarrow as pa
@@ -3442,33 +3370,10 @@ def _nsw_graph(t, seeds: DataFrame | None = None) -> DataFrame:
                 continue
             vcol = batch.column("v")
             flat = vcol.flatten().to_numpy(zero_copy_only=False)
-            dim = flat.size // n
-            V = flat.reshape(n, dim)
-            # per-dim left folds: bit-identical to dot_double
-            nsq = np.zeros(n)
-            for d in range(dim):
-                col = V[:, d]
-                nsq = nsq + col * col
-            nrm = np.sqrt(nsq)
-            assert nrm.min() > 0.0, "zero-norm embedding in assign"
-            # first-max argmax == max_by((cs, -sid)) with sid ascending.
-            # r15: seed axis (sqrt(N)) tiled with a running argmax —
-            # within a block first-max picks the smallest sid, across
-            # ascending-sid blocks strict > keeps ties on the earlier
-            # (smaller) sid, exactly the dense argmax's choice.
-            best_cs = np.full(n, -np.inf)
-            best = np.zeros(n, dtype=np.int64)
-            for s0 in range(0, len(sids_np), tile):
-                s1 = min(s0 + tile, len(sids_np))
-                acc = np.zeros((n, s1 - s0))
-                for d in range(dim):
-                    acc = acc + V[:, d][:, None] * sv_np[s0:s1, d][None, :]
-                cs = acc / (nrm[:, None] * snrm_np[None, s0:s1])
-                blk_arg = np.argmax(cs, axis=1)
-                blk_max = cs[np.arange(n), blk_arg]
-                take = blk_max > best_cs
-                best_cs[take] = blk_max[take]
-                best[take] = sids_np[s0 + blk_arg[take]]
+            V = flat.reshape(n, -1)
+            nrm = row_norms(V)
+            # first-max argmax == max_by((cs, -sid)) with sid ascending
+            _, best = _argmax_ids_tiled(V, sv_np, nrm, snrm_np, sids_np, tile)
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("vec_id"),
@@ -3492,8 +3397,7 @@ def _nsw_graph(t, seeds: DataFrame | None = None) -> DataFrame:
         ids = pdf["vec_id"].to_numpy()
         V = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
         nrm = pdf["nrm"].to_numpy()
-        # row_number() over (ORDER BY c DESC, dst ASC), self excluded —
-        # r15: tiled top-k (see _topk_ids_tiled), O(tile^2) resident.
+        # row_number() over (ORDER BY c DESC, dst ASC), self excluded
         src, dst = [], []
         k = min(NSW_DEG, n - 1)
         for i, row in enumerate(_topk_ids_tiled(ids, V, nrm, k, tile)):
@@ -3612,9 +3516,9 @@ def sim_search_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Start scores driver-side from the ALREADY-materialized sqrt(N)
     # seed layer + the 5 query rows — the exhaustive layer-1 descent
-    # was a crossJoin + window job over the same numbers. The NumPy
-    # per-dimension fold is dot_double's exact left fold (the kernel
-    # recipe); qn/snrm are the Spark-folded doubles themselves.
+    # was a crossJoin + window job over the same numbers, scored by the
+    # shared fold (dedup._PAIR_TILE); qn/snrm are the Spark-folded
+    # doubles themselves.
     seed_rows = sorted(
         seeds.select("sid", "sv", "snrm").collect(), key=lambda r: r.sid
     )
@@ -3622,13 +3526,11 @@ def sim_search_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     SV = np.array([r.sv for r in seed_rows], dtype=np.float64)
     snrm = np.array([r.snrm for r in seed_rows], dtype=np.float64)
     q_rows = sorted(q.collect(), key=lambda r: r.query_id)
+    Q = np.array([r.qe for r in q_rows], dtype=np.float64)
+    qn = np.array([r.qn for r in q_rows], dtype=np.float64)
+    CS = _dot_fold(Q, SV) / (qn[:, None] * snrm[None, :])
     visited: dict[tuple[int, int], float] = {}
-    for r in q_rows:
-        qe = np.asarray(r.qe, dtype=np.float64)
-        acc = np.zeros(len(sids))
-        for d in range(qe.shape[0]):
-            acc = acc + qe[d] * SV[:, d]
-        cs = acc / (r.qn * snrm)
+    for r, cs in zip(q_rows, CS):
         # row_number() over (cs DESC, sid) <= NSW_STARTS
         top = np.lexsort((sids, -cs))[:NSW_STARTS]
         for i in top:

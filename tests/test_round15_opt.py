@@ -1,99 +1,21 @@
 """Round 15 optimization equivalence pins.
 
-The r14 fused pair kernels materialized one dense (n, n) cosine matrix
-per LSH bucket / IVF cell inside a single Python worker; r15 tiles them
-into fixed-size blocks (VERDICT r14 item 2). These tests force the
-MULTI-BLOCK code path on real operators by shrinking the tile to a few
-rows — every bucket/cell becomes a "hot bucket" spanning many tiles —
-and pin that the output is IDENTICAL (exact float equality, not
-approximate) to the default single-block run.
-
-Also pinned: the size-dispatched broadcast hint of the iterative graph
+Pinned here: the size-dispatched broadcast hint of the iterative graph
 family (VERDICT r14 item 1) — the forced-shuffle path (cap=0) must emit
-the identical rows the broadcast path emits, and _topk_ids_tiled's
-running top-k merge must replay the dense lexsort rule under
-adversarial ties.
+the identical rows the broadcast path emits — plus the label-prop codes,
+the fanout no-op, the profile_table Expand split and the worker-daemon
+preload list. The tiled cosine kernel pins live in test_llm_kernels.py.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
-
 from data_ingestion_poc_spark import registry
-from data_ingestion_poc_spark.llm import dedup as dedup_mod
-from data_ingestion_poc_spark.llm import evaluation as eval_mod
-from data_ingestion_poc_spark.llm import similarity as sim_mod
-from data_ingestion_poc_spark.llm.similarity import _topk_ids_tiled
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "dedup_embedding_cosine",   # _bucket_pairs (LSH bucket kernel)
-        "dedup_semantic",           # _cell_dups (best-earlier kernel)
-        "embed_hubness_ivf",        # _assign + _cell_topk
-        "sim_search_nsw",           # _assign + _cell_knn (graph build)
-        "dedup_embedding_recall",   # _exact_pairs (anchor-axis tiling)
-    ],
-)
-def test_tiled_kernels_match_dense_on_hot_buckets(spark, name, monkeypatch):
-    """tile=3 forces every bucket/cell through many blocks (sf0.001 has
-    ~500 vectors, cells of ~20 rows -> 7+ blocks each); the collected
-    result must equal the default run bit-for-bit. The tile is captured
-    driver-side into each kernel closure, so the monkeypatch reaches the
-    executors through pickling."""
-    fn = registry.get(name).fn
-    base = _rows(fn(spark, SF_SMOKE))
-    for mod in (dedup_mod, sim_mod, eval_mod):
-        monkeypatch.setattr(mod, "_PAIR_TILE", 3, raising=False)
-    tiled = _rows(fn(spark, SF_SMOKE))
-    assert tiled == base
-
-
-def test_topk_tiled_merge_replays_dense_lexsort_under_ties():
-    """Adversarial ties: duplicated vectors (equal cosines everywhere)
-    must rank by ascending id, exactly the dense kernel's
-    np.lexsort((ids, -C[i])) rule, at every tile size."""
-    rng = np.random.RandomState(7)
-    base = rng.randn(9, 4)
-    V = np.vstack([base, base[:4], base[:2]])  # planted exact ties
-    ids = np.arange(100, 100 + len(V), dtype=np.int64)
-    rng.shuffle(ids)  # id order decoupled from row order
-    nsq = np.zeros(len(V))
-    for d in range(V.shape[1]):
-        nsq = nsq + V[:, d] * V[:, d]
-    nrm = np.sqrt(nsq)
-    acc = np.zeros((len(V), len(V)))
-    for d in range(V.shape[1]):
-        acc = acc + np.outer(V[:, d], V[:, d])
-    C = acc / np.outer(nrm, nrm)
-    k = 5
-    dense = []
-    for i in range(len(V)):
-        order = np.lexsort((ids, -C[i]))
-        order = order[ids[order] != ids[i]][:k]
-        dense.append(list(ids[order]))
-    for tile in (1, 2, 3, 7, 64):
-        got = [list(row) for row in _topk_ids_tiled(ids, V, nrm, k, tile)]
-        assert got == dense, f"tile={tile}"
-
-
-def test_cell_kernels_assert_on_zero_norm_vectors():
-    """A zero-norm vector's NaN cosines would silently rank LAST in the
-    NumPy kernels while the SQL window they replay ranks NaN FIRST
-    (r14 ADVICE): the kernels must fail loudly instead of diverging."""
-    V = np.array([[1.0, 0.0], [0.0, 0.0]])
-    ids = np.array([1, 2], dtype=np.int64)
-    nrm = np.sqrt((V * V).sum(axis=1))
-    with pytest.raises(AssertionError):
-        _topk_ids_tiled(ids, V, nrm, 1)
 
 
 def test_graph_bcast_shuffle_path_emits_identical_rows(spark, monkeypatch):
