@@ -5,12 +5,30 @@ DataFrames. Reads are plain ``spark.read.parquet`` so Catalyst gets predicate
 pushdown / column pruning for free; at 100 TB these would be external tables
 with partition columns, and the same accessors would resolve through the
 metastore instead of paths.
+
+Schema registry. Inferring a parquet table's schema runs one Spark job that
+reads the footers, so ``_SCHEMAS`` keeps each table's raw schema (before ``normalize_event_ts``), keyed by
+``(spark.sparkContext.applicationId, absolute table path)``, next to a
+fingerprint of the files read: ``(path, size, st_mtime_ns)`` of the table
+file, or of every file under a directory table. Each access stats the files
+again and re-infers when the fingerprint differs, replacing the entry in
+place, so the dict holds one entry per session and path. The key carries no
+conf values: the only inference-relevant conf, ``nanosAsLong``, is pinned by
+``ensure_session_confs`` before every read. What is cached is a schema, not
+a DataFrame: each call still returns a fresh ``spark.read.schema(...)``
+relation with new attribute ids, so self-joins of one table (two ``nation``
+frames) stay unambiguous. The rule needs a local ``os.stat``: a path the
+driver cannot stat (a non-local store) is inferred on every call, and a
+rewrite that keeps a file's size and mtime is not seen.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -63,11 +81,48 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+#: (applicationId, absolute table path) -> (file fingerprint, raw schema)
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple:
+    """``(path, size, st_mtime_ns)`` of the table file, or of every file
+    under a directory table. Raises OSError where ``path`` cannot be
+    stat'ed."""
+    if os.path.isdir(path):
+        files = sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+    else:
+        files = [path]
+    stats = [(f, os.stat(f)) for f in files]
+    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """Raw parquet schema of table ``name`` (events.ts not yet normalized),
+    inferred at most once per session and file fingerprint (module
+    docstring)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = (spark.sparkContext.applicationId, os.path.abspath(path))
+    try:
+        fingerprint = _fingerprint(key[1])
+    except OSError:
+        return spark.read.parquet(path).schema
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (fingerprint, schema)
+    return schema
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A fresh relation over table ``name``, read with its registry schema;
+    events.ts is normalized on every call."""
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
     return df

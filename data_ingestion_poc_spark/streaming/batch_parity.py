@@ -409,13 +409,13 @@ def stream_file_ingest_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from ..catalog import normalize_event_ts
+    from ..catalog import normalize_event_ts, table_schema
 
     run = os.path.join(tempfile.gettempdir(), f"dip_ingest_clean_{uuid.uuid4().hex[:8]}")
     inbox = os.path.join(run, "inbox")
     os.makedirs(inbox, exist_ok=True)
     shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(inbox, "drop0.parquet"))
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = table_schema(spark, sf_dir, "events")
     sdf = normalize_event_ts(
         spark.readStream.schema(schema)
         .option("cleanSource", "delete")
@@ -1224,6 +1224,8 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
+    from ..catalog import table_schema
+
     run = os.path.join(
         tempfile.gettempdir(), f"dip_quality_gate_{uuid.uuid4().hex[:8]}"
     )
@@ -1237,9 +1239,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.copytree(src, dst)
     else:
         shutil.copy(src, dst)
-    schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).schema
+    schema = table_schema(spark, sf_dir, "documents")
     sdf = spark.readStream.schema(schema).parquet(inbox)
 
     from ..llm.textstats import STOPWORDS

@@ -27,14 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table (schema from a batch peek;
-    file streams require an explicit schema). The ns->us timestamp
+    """File-source stream over the events table (schema from
+    ``catalog.table_schema``; file streams require an explicit schema). The ns->us timestamp
     normalization is applied on the stream exactly as in the batch
     catalog, so stream/batch parity is apples-to-apples."""
     import os
     import tempfile
 
-    from ..catalog import normalize_event_ts
+    from ..catalog import normalize_event_ts, table_schema
 
     # The file stream source requires a DIRECTORY; stage one containing a
     # symlink to the events parquet (zero-copy). Keyed by a digest of the
@@ -52,7 +52,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     link = os.path.join(stage, "events.parquet")
     if not os.path.exists(link):
         os.symlink(src, link)
-    schema = spark.read.parquet(src).schema
+    schema = table_schema(spark, sf_dir, "events")
     sdf = spark.readStream.schema(schema).parquet(stage)
     return normalize_event_ts(sdf)
 
@@ -106,6 +106,8 @@ def docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import glob
 
+    from ..catalog import table_schema
+
     src = os.path.join(sf_dir, "documents.parquet")
     path_key = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
     stage = os.path.join(
@@ -139,5 +141,5 @@ def docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         link = os.path.join(stage, os.path.basename(p))
         if not os.path.exists(link):
             os.symlink(p, link)
-    schema = spark.read.parquet(src).schema
+    schema = table_schema(spark, sf_dir, "documents")
     return spark.readStream.schema(schema).parquet(stage)

@@ -216,3 +216,26 @@ def test_survey_parity_detects_missing_name(tmp_path):
     survey.write_text("## 2\n| `agg_hash_group` | x |\n")
     gaps = survey_registry_gaps(str(survey), {"agg_hash_group", "new_op"})
     assert gaps == ["new_op"]
+
+
+def test_update_patches_only_the_batch_table(tmp_path):
+    # --update once overwrote the same-named row of the sf0.1 delta
+    # table further down PLANS.md; only batch-table rows may move
+    from tools.plan_audit import patch_batch_rows
+
+    delta_row = "| `dedup_semantic` / `dedup_semantic_recall` | sh +1/+3 | eval frames |"
+    plans = tmp_path / "PLANS.md"
+    plans.write_text(
+        "# PLANS\n\n| query | shuffles |\n|---|---|\n"
+        "| `agg_hash_group` | 1 |\n| `dedup_semantic` | 2 |\n\n"
+        "## Streaming — executed micro-batch plans\n\n| `stream_dedup` | 1 |\n\n"
+        "## sf0.1 plan-shape audit\n\n" + delta_row + "\n"
+    )
+    audited = ["| `dedup_semantic` | 9 |", "| `new_op` | 0 |"]
+    patched = patch_batch_rows(plans.read_text().splitlines(), audited)
+    assert patched == [
+        "# PLANS", "", "| query | shuffles |", "|---|---|",
+        "| `agg_hash_group` | 1 |", "| `dedup_semantic` | 9 |", "| `new_op` | 0 |", "",
+        "## Streaming — executed micro-batch plans", "", "| `stream_dedup` | 1 |", "",
+        "## sf0.1 plan-shape audit", "", delta_row,
+    ]

@@ -974,6 +974,32 @@ def write_stream_section(out_path: str, rows: list[str], sf: str) -> None:
         f.write(existing)
 
 
+def patch_batch_rows(existing: list[str], lines: list[str]) -> list[str]:
+    """Replace the batch-table rows of ``existing`` (PLANS.md lines) that
+    ``lines`` audited, and append the new ones after the table's last row.
+    Everything from the first ``## `` section on is left as it is: the
+    streaming table and the sf0.1 delta table reuse query names in their
+    first column."""
+    new_rows = {ln.split("`")[1]: ln for ln in lines if ln.startswith("| `")}
+    patched, seen = [], set()
+    last_row_idx = 0
+    past_batch_table = False
+    for i, ln in enumerate(existing):
+        if ln.startswith("## "):
+            past_batch_table = True
+        if ln.startswith("| `") and not past_batch_table:
+            last_row_idx = i
+            name = ln.split("`")[1]
+            if name in new_rows:
+                patched.append(new_rows[name])
+                seen.add(name)
+                continue
+        patched.append(ln)
+    appended = [new_rows[n] for n in new_rows if n not in seen]
+    patched[last_row_idx + 1:last_row_idx + 1] = appended
+    return patched
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -1084,33 +1110,7 @@ def main() -> None:
         # patch the audited rows into the committed table in place
         with open(args.out) as f:
             existing = f.read().splitlines()
-        new_rows = {
-            ln.split("`")[1]: ln
-            for ln in lines
-            if ln.startswith("| `")
-        }
-        patched, seen = [], set()
-        last_row_idx = 0
-        in_stream_section = False
-        for i, ln in enumerate(existing):
-            if ln.startswith(_STREAM_SECTION_HEADER):
-                in_stream_section = True
-            if ln.startswith("| `"):
-                name = ln.split("`")[1]
-                if not in_stream_section:
-                    # append anchor: the BATCH table only — appending
-                    # after a streaming row once landed batch rows
-                    # inside the streaming section
-                    last_row_idx = i
-                if name in new_rows:
-                    patched.append(new_rows[name])
-                    seen.add(name)
-                    continue
-            patched.append(ln)
-        appended = [new_rows[n] for n in new_rows if n not in seen]
-        if appended:
-            insert_at = last_row_idx + 1
-            patched[insert_at:insert_at] = appended
+        patched = patch_batch_rows(existing, lines)
         with open(args.out, "w") as f:
             f.write("\n".join(patched) + "\n")
     elif not args.only:
