@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import fanout_repartition, load
+from ..operators.sorts import prefix_offsets
 from ..registry import register
 from .dedup import (
     _CLUSTERS_ORACLE,
@@ -359,15 +360,12 @@ def corpus_pack_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The global running offset is a prefix sum over a TOTAL order — the
     naive window (ORDER BY doc_id with no partition) is a
-    single-partition sort that dies at corpus scale. This computes it as
-    the classic two-phase distributed scan instead: (1) bucket docs by
-    contiguous doc_id ranges, (2) per-bucket token totals — P tiny rows —
-    collected and turned into exclusive bucket offsets, folded back as a
-    literal map lookup (no join), (3) within-bucket running sum over the
-    one hash(bucket) shuffle. Same trick as Spark's own zipWithIndex;
-    P buckets here = 8, sized so each bucket is one task's worth. The
-    only data-sized shuffle is the bucket repartition; no
-    Exchange SinglePartition appears (pinned in tests)."""
+    single-partition sort that dies at corpus scale. Instead docs are
+    bucketed by contiguous doc_id ranges (8 buckets, each one task's
+    worth), sorts.prefix_offsets gives each bucket its exclusive token
+    offset, and a within-bucket running sum over the one hash(bucket)
+    shuffle completes it. The only data-sized shuffle is the bucket
+    repartition; no Exchange SinglePartition appears (pinned in tests)."""
     t = load(spark, sf_dir)
     lens = t.documents.select(
         "doc_id",
@@ -377,28 +375,15 @@ def corpus_pack_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi = lens.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
     span = (hi + n_buckets) // n_buckets  # ceil((hi+1)/P)
     bucketed = lens.withColumn("bucket", F.floor(F.col("doc_id") / span))
-    partials = {
-        r["bucket"]: r["total"]
-        for r in bucketed.groupBy("bucket")
-        .agg(F.sum("tok_len").alias("total"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for b in sorted(partials):
-        offsets[b] = acc
-        acc += partials[b]
-    offset_map = F.create_map(
-        *[F.lit(x) for b in sorted(offsets) for x in (b, offsets[b])]
-    )
     w = (
         Window.partitionBy("bucket")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    c = bucketed.select(
+    c = prefix_offsets(bucketed, [], "bucket", F.col("tok_len")).select(
         "doc_id",
         "tok_len",
-        (F.sum("tok_len").over(w) + offset_map[F.col("bucket")]).alias("end_off"),
+        (F.sum("tok_len").over(w) + F.col("_off")).alias("end_off"),
     )
     first_block = F.floor((F.col("end_off") - F.col("tok_len")) / 512)
     last_block = F.floor((F.col("end_off") - 1) / 512)
@@ -545,11 +530,11 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The cumulative sum is over a TOTAL order — the same
     single-partition-window trap corpus_pack_blocks documents. Same cure:
-    bucket by contiguous ranges of the SORT KEY (n_chars), compute
-    per-bucket token totals (tiny), fold exclusive bucket offsets back as
-    a literal map, and run the running sum per-bucket under one
-    hash(bucket) Exchange. Docs sharing an n_chars value always share a
-    bucket, so the bucket-local order extends to the global order."""
+    bucket by contiguous ranges of the SORT KEY (n_chars), take exclusive
+    bucket offsets from sorts.prefix_offsets, and run the running sum
+    per-bucket under one hash(bucket) Exchange. Docs sharing an n_chars
+    value always share a bucket, so the bucket-local order extends to
+    the global order."""
     t = load(spark, sf_dir)
     lens = t.documents.select(
         "doc_id",
@@ -565,28 +550,15 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = lens.withColumn(
         "bucket", F.floor((F.lit(bounds["hi"]) - F.col("n_chars")) / span)
     )
-    partials = {
-        r["bucket"]: r["total"]
-        for r in bucketed.groupBy("bucket")
-        .agg(F.sum("tok_len").alias("total"))
-        .collect()
-    }
-    offsets, acc = {}, 0
-    for b in sorted(partials):
-        offsets[b] = acc
-        acc += partials[b]
-    offset_map = F.create_map(
-        *[F.lit(x) for b in sorted(offsets) for x in (b, offsets[b])]
-    )
     w = (
         Window.partitionBy("bucket")
         .orderBy(F.col("n_chars").desc(), "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    c = bucketed.select(
+    c = prefix_offsets(bucketed, [], "bucket", F.col("tok_len")).select(
         "doc_id",
         "tok_len",
-        (F.sum("tok_len").over(w) + offset_map[F.col("bucket")]).alias("cum_tokens"),
+        (F.sum("tok_len").over(w) + F.col("_off")).alias("cum_tokens"),
     )
     return c.where(F.col("cum_tokens") <= TOKEN_BUDGET).select(
         "doc_id", "tok_len", F.col("cum_tokens").cast("bigint").alias("cum_tokens")

@@ -11,8 +11,9 @@ path; prefer top-k when k is small.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from ..catalog import load
@@ -40,21 +41,9 @@ def sort_multi_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``row_number().over(Window.orderBy(...))`` would move the whole table
     into ONE partition (WindowExec warns exactly that; the r4 plan audit
-    flagged it), so the global position is assigned distributedly
-    instead — the classic two-phase recipe:
-
-    1. range-partition on the sort keys + sort within partitions (the
-       one full-data exchange a global sort needs anyway);
-    2. ``monotonically_increasing_id`` encodes (partition index << 33) +
-       local row position — computed in place, no shuffle, deterministic
-       here because the tiebreak on unique o_orderkey makes the sort a
-       total order;
-    3. per-partition row counts (one row per range partition) get a
-       prefix-sum offset via a tiny window and broadcast-join back;
-       sort_pos = offset + local position.
-
-    The only SinglePartition exchange left is the prefix-sum over the
-    partition-count frame — bounded at one row per range partition."""
+    flagged it), so the position comes from global_row_number instead:
+    one range exchange (the one full-data exchange a global sort needs
+    anyway) and no SinglePartition exchange."""
     t = load(spark, sf_dir)
     base = t.orders.where(F.col("o_orderkey") < 2000).select(
         "o_orderkey",
@@ -73,30 +62,76 @@ def sort_multi_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def prefix_offsets(
+    df: DataFrame, keys: list[str], bucket: str, weight: Column
+) -> DataFrame:
+    """The distributed prefix sum, written once: `df` broadcast-joined on
+    ``keys + [bucket]`` with ``_off``, the summed `weight` of the rows of
+    the same `keys` group in LOWER buckets, and ``_total``, the group's
+    summed weight. A caller adds its own within-bucket term (a
+    ``row_number``, a running ``sum``, a local position) to ``_off`` and
+    gets a global rank or running total over a total order without a
+    single-partition window: local work per bucket plus one small global
+    merge, the shape of Spark's RDD.zipWithIndex and of REPOSE (ICDE
+    2021). `weight` is an integral column — ``F.lit(1)`` counts rows — so
+    every offset is an exact integer; keys and buckets are non-null.
+
+    Driver bound: the per-(keys, bucket) sums are collected and folded on
+    the driver in bucket order — |keys| x |buckets| rows at any input
+    size, so callers keep `keys` low-cardinality (segments, priorities)
+    and the bucket count at most a few thousand.
+
+    The bucket must extend the order: within a `keys` group, every row
+    of a lower bucket sorts before every row of a higher one. A bucket
+    that is a pure function of the sort VALUE (value ranges: ntile, gini,
+    corpus) is the same on every evaluation and needs nothing more. A
+    bucket read off the physical layout — range partitioning or partition
+    ids (global_row_number) — must come from a frame behind a
+    ``localCheckpoint`` barrier: repartitionByRange samples its
+    boundaries afresh on every evaluation, so without the barrier the
+    aggregate collected here and the frame it joins back to see
+    different partitionings, and ranks duplicate or skip (the r10 sf0.1
+    sweep caught it on corpus_heaps_law: bucket sizes 439-550 instead of
+    500; sf0.01 masked it because range sampling is exhaustive on small
+    inputs)."""
+    agg = df.groupBy(*keys, bucket).agg(F.sum(weight).alias("_w"))
+    groups: dict[tuple, list] = {}
+    for r in agg.collect():
+        groups.setdefault(tuple(r[k] for k in keys), []).append(
+            (r[bucket], r["_w"])
+        )
+    rows = []
+    for key, parts in groups.items():
+        total = sum(w for _, w in parts)
+        acc = 0
+        for b, w in sorted(parts):
+            rows.append((*key, b, acc, total))
+            acc += w
+    wtype = agg.schema["_w"].dataType
+    schema = StructType(
+        [agg.schema[c] for c in (*keys, bucket)]
+        + [StructField("_off", wtype), StructField("_total", wtype)]
+    )
+    offs = df.sparkSession.createDataFrame(rows, schema)
+    return df.join(F.broadcast(offs), [*keys, bucket])
+
+
 def global_row_number(
     df: DataFrame, order: list, pos_col: str, num_partitions: int = 8
 ) -> DataFrame:
     """Assign a 1-based global row number under `order` WITHOUT moving the
-    table into one partition (the two-phase distributed recipe — see
-    sort_multi_key's docstring). `order` must be a TOTAL order (include a
+    table into one partition. `order` must be a TOTAL order (include a
     unique tiebreak column) or the assignment is nondeterministic within
     ties. Output keeps all input columns plus `pos_col` (int), range-
     partitioned and locally sorted by `order`.
 
-    The localCheckpoint is the CONSISTENCY BARRIER this recipe needs:
-    the offsets aggregate and the main frame are two plan branches over
-    the same range exchange, and repartitionByRange's boundary SAMPLING
-    is nondeterministic per evaluation — without the barrier the two
-    branches can see different partitionings, so offsets no longer match
-    the rows they are joined back to and ranks duplicate/skip (caught by
-    the r10 full-registry sf0.1 sweep on corpus_heaps_law: bucket sizes
-    439-550 instead of 500; sf0.01 masked it because range sampling is
-    exhaustive on small inputs). Spark's own RDD.zipWithIndex pins an
-    evaluation the same way (an eager count job per partition); lazy
-    localCheckpoint materializes each partition once (MEMORY_AND_DISK)
-    on first use and both branches then read the same blocks — the one
-    full-table materialization a distributed global rank fundamentally
-    requires."""
+    Range-partition and sort within partitions, then
+    ``monotonically_increasing_id`` encodes (partition index << 33) +
+    local row position, computed in place with no shuffle; the partition
+    index is the prefix_offsets bucket and the local position its
+    within-bucket term. The partition index is read off the layout, so
+    the localCheckpoint is the barrier prefix_offsets requires; both the
+    collected counts and the joined frame read its blocks."""
     ranged = (
         df.repartitionByRange(num_partitions, *order)
         .sortWithinPartitions(*order)
@@ -105,21 +140,12 @@ def global_row_number(
         .withColumn("_local", F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)))
         .localCheckpoint(eager=False)
     )
-    offsets = (
-        ranged.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .withColumn(
-            "_off",
-            F.sum("_cnt").over(Window.orderBy("_pid")) - F.col("_cnt"),
-        )
-        .select("_pid", "_off")
-    )
     return (
-        ranged.join(F.broadcast(offsets), "_pid")
+        prefix_offsets(ranged, [], "_pid", F.lit(1))
         .withColumn(
             pos_col, (F.col("_off") + F.col("_local") + 1).cast("int")
         )
-        .drop("_mid", "_pid", "_local", "_off")
+        .drop("_mid", "_pid", "_local", "_off", "_total")
     )
 
 

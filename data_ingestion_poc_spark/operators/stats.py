@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load
 from ..registry import register
+from .sorts import prefix_offsets
 
 #: 5% critical values of the chi-squared distribution by degrees of
 #: freedom (1..12) — literals because neither engine ships an
@@ -191,14 +192,11 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     one order carries everything). Uses the exact rank formula
     G = 2*sum(rank_i * x_i) / (n * sum(x)) - (n+1)/n.
 
-    The distributed trick is the win_ntile_quartiles two-phase shape —
-    ranks WITHOUT a table-scale window partition: (1) range-bucket rows
-    by value (pure function of the value, so ties share a bucket);
-    (2) count rows per (priority, bucket) — a tiny combinable aggregate
-    folded into EXCLUSIVE per-priority offsets on the driver
-    (|priorities| x n_buckets rows, KBs at any scale); (3) broadcast
-    the offsets back, rank bucket-locally (each window task sorts
-    <= ~_GINI_BUCKET_ROWS rows), global rank = offset + local rank.
+    Ranks come WITHOUT a table-scale window partition: rows are
+    range-bucketed by value (a pure function of the value, so ties share
+    a bucket), sorts.prefix_offsets gives each (priority, bucket) its
+    exclusive offset, and a bucket-local ``row_number`` (each window
+    task sorts <= ~_GINI_BUCKET_ROWS rows) completes the global rank.
 
     Determinism: money is folded to integer CENTS, ranks and counts are
     integers, so every SUM (rank*cents, cents, n) is exact and
@@ -228,31 +226,12 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(n_buckets - 1),
     ).alias("bucket")
     bucketed = o.select("o_orderkey", "o_orderpriority", "cents", bucket)
-    counts = (
-        bucketed.groupBy("o_orderpriority", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    per_p: dict[str, list] = {}
-    for r in counts:
-        per_p.setdefault(r["o_orderpriority"], []).append(
-            (r["bucket"], r["cnt"])
-        )
-    offs_rows = []
-    for pri, bl in per_p.items():
-        acc = 0
-        for bkt, c in sorted(bl):
-            offs_rows.append((pri, bkt, acc))
-            acc += c
-    offs = spark.createDataFrame(
-        offs_rows, "o_orderpriority string, bucket bigint, off bigint"
-    )
     w = Window.partitionBy("o_orderpriority", "bucket").orderBy(
         "cents", "o_orderkey"
     )
-    ranked = bucketed.join(
-        F.broadcast(offs), ["o_orderpriority", "bucket"]
-    ).withColumn("rk", F.row_number().over(w) + F.col("off"))
+    ranked = prefix_offsets(
+        bucketed, ["o_orderpriority"], "bucket", F.lit(1)
+    ).withColumn("rk", F.row_number().over(w) + F.col("_off"))
     g = ranked.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("cents").alias("t_cents"),

@@ -1059,17 +1059,13 @@ def win_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows linearly with data even though partition COUNT is bounded, so
     at 100x it is five single-task sorts of the whole customer table.
 
-    Two-phase form instead (corpus_token_budget's prefix-sum shape):
-    (1) range-bucket every row by its sort key — ``floor((c_acctbal -
-    lo) / span)``, a pure function of the VALUE, so acctbal ties always
-    share a bucket and bucket-local order extends to the global
-    per-segment order; (2) count rows per (segment, bucket) — a tiny
-    map-side-combinable aggregate — and fold EXCLUSIVE per-segment
-    offsets + segment totals on the driver (|segments| x n_buckets rows,
-    KBs at any corpus size); (3) broadcast-join the offsets back and run
-    ``row_number`` under ``Window.partitionBy(segment, bucket)`` — each
-    window task sorts <= ~_NTILE_BUCKET_ROWS rows — then assign the tile
-    with NTILE's exact closed form: base = N div 4, rem = N mod 4, the
+    Two-phase form instead: range-bucket every row by its sort key —
+    ``floor((c_acctbal - lo) / span)``, a pure function of the VALUE, so
+    acctbal ties always share a bucket — and take per-segment bucket
+    offsets and segment totals from sorts.prefix_offsets; ``row_number``
+    under ``Window.partitionBy(segment, bucket)`` (each window task sorts
+    <= ~_NTILE_BUCKET_ROWS rows) adds the within-bucket rank. The tile
+    is NTILE's exact closed form: base = N div 4, rem = N mod 4, the
     first ``rem`` tiles get base+1 rows (remainder rows go to the LOWEST
     tiles in strict order, which is why the (c_acctbal, c_custkey)
     tiebreak must be total). Caveat shared with every range-bucket
@@ -1077,6 +1073,8 @@ def win_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     would concentrate its bucket; balances are near-uniform, and the
     skew cure would be the win_sessionize_salted sub-split with
     offset re-fold."""
+    from .sorts import prefix_offsets  # sorts registers after windows
+
     t = load(spark, sf_dir)
     cust = t.customer.select("c_custkey", "c_mktsegment", "c_acctbal")
     b = cust.agg(
@@ -1091,32 +1089,14 @@ def win_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(n_buckets - 1),
     ).alias("bucket")
     bucketed = cust.select("c_custkey", "c_mktsegment", "c_acctbal", bucket)
-    counts = (
-        bucketed.groupBy("c_mktsegment", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    per_seg: dict[str, list] = {}
-    for r in counts:
-        per_seg.setdefault(r["c_mktsegment"], []).append((r["bucket"], r["cnt"]))
-    offs_rows = []
-    for seg, bl in per_seg.items():
-        seg_n = sum(c for _, c in bl)
-        acc = 0
-        for bkt, c in sorted(bl):
-            offs_rows.append((seg, bkt, acc, seg_n))
-            acc += c
-    offs = spark.createDataFrame(
-        offs_rows, "c_mktsegment string, bucket bigint, off bigint, seg_n bigint"
-    )
     w = Window.partitionBy("c_mktsegment", "bucket").orderBy(
         "c_acctbal", "c_custkey"
     )
-    ranked = bucketed.join(
-        F.broadcast(offs), ["c_mktsegment", "bucket"]
-    ).withColumn("rk0", F.row_number().over(w) - 1 + F.col("off"))
-    base = F.floor(F.col("seg_n") / 4)
-    rem = F.col("seg_n") % 4
+    ranked = prefix_offsets(
+        bucketed, ["c_mktsegment"], "bucket", F.lit(1)
+    ).withColumn("rk0", F.row_number().over(w) - 1 + F.col("_off"))
+    base = F.floor(F.col("_total") / 4)
+    rem = F.col("_total") % 4
     tile = F.when(
         F.col("rk0") < rem * (base + 1), F.floor(F.col("rk0") / (base + 1)) + 1
     ).otherwise(

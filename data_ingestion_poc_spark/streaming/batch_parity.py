@@ -462,12 +462,14 @@ def stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from ..catalog import normalize_event_ts
+    from ..catalog import normalize_event_ts, table_schema
 
     run = os.path.join(tempfile.gettempdir(), f"dip_rollup_{uuid.uuid4().hex[:8]}")
     inbox = os.path.join(run, "inbox")
     os.makedirs(inbox, exist_ok=True)
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = spark.read.schema(table_schema(spark, sf_dir, "events")).parquet(
+        os.path.join(sf_dir, "events.parquet")
+    )
     for i in range(3):
         slice_dir = os.path.join(run, f"slice{i}")
         ev.where(F.col("event_id") % 3 == i).coalesce(1).write.parquet(slice_dir)
@@ -559,13 +561,12 @@ def stream_append_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from ..catalog import normalize_event_ts
+    from ..catalog import table
 
     run = os.path.join(tempfile.gettempdir(), f"dip_append_{uuid.uuid4().hex[:8]}")
     inbox = os.path.join(run, "inbox")
     os.makedirs(inbox, exist_ok=True)
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    evn = normalize_event_ts(ev)
+    evn = table(spark, sf_dir, "events")
     cuts = ["2024-01-06 00:00:00", "2024-01-11 00:00:00"]
     slices = [
         evn.where(F.col("ts") < cuts[0]),
@@ -635,16 +636,14 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from ..catalog import normalize_event_ts
+    from ..catalog import table
 
     run = os.path.join(tempfile.gettempdir(), f"dip_resume_{uuid.uuid4().hex[:8]}")
     inbox = os.path.join(run, "inbox")
     sink = os.path.join(run, "sink")
     ckpt = os.path.join(run, "ckpt")
     os.makedirs(inbox, exist_ok=True)
-    evn = normalize_event_ts(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    )
+    evn = table(spark, sf_dir, "events")
     cut = "2024-01-11 00:00:00"
     slices = [
         evn.where(F.col("ts") < "2024-01-06 00:00:00"),

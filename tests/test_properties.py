@@ -5,6 +5,10 @@ inputs (unicode, ties, empties), not volume."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import inspect
+import os
 import re
 
 from hypothesis import given, settings, strategies as st
@@ -302,30 +306,127 @@ def test_pyhash_property_matches_spark(spark, texts):
 
 @settings(max_examples=8, deadline=None)
 @given(
-    st.lists(  # (group value with ties, unique tiebreak id)
-        st.tuples(st.integers(-5, 5), st.integers(0, 9999)),
+    st.lists(  # (group key, value with ties, unique tiebreak id, weight)
+        st.tuples(
+            st.integers(0, 2),
+            st.integers(-5, 5),
+            st.integers(0, 9999),
+            st.integers(0, 9),
+        ),
         min_size=1,
         max_size=60,
-        unique_by=lambda t: t[1],
+        unique_by=lambda t: t[2],
     ),
-    st.integers(1, 6),  # partition counts, incl. more partitions than rows
+    st.sampled_from([1, 2, 5, 64]),  # partition counts, incl. more than rows
+    st.booleans(),  # per-key offsets, or one group over every row
+    st.booleans(),  # summed weight, or a row count
+    st.sampled_from([1, 3, 100]),  # bucket width; 100 = one bucket holds all
 )
-def test_global_row_number_matches_sorted_model(spark, rows, nparts):
-    """The distributed two-phase row number (sorts.global_row_number) must
-    equal the position in a plain Python sort, for ANY partition count —
-    including empty range partitions and heavy ties in the leading key."""
-    from data_ingestion_poc_spark.operators.sorts import global_row_number
+def test_global_row_number_matches_sorted_model(
+    spark, rows, nparts, keyed, weighted, width
+):
+    """The distributed prefix sums must equal a plain single-pass model
+    over a Python sort, for ANY partition count — including empty range
+    partitions, heavy ties in the leading key, buckets missing from a
+    key group and one bucket holding every row:
 
-    df = spark.createDataFrame(rows, "v int, id int")
+    - sorts.global_row_number: the row's position in the sort;
+    - sorts.prefix_offsets plus a bucket-local running sum: the running
+      row count or weight sum per key, and ``_total`` the key's total."""
+    from pyspark.sql.window import Window
+
+    from data_ingestion_poc_spark.operators.sorts import (
+        global_row_number,
+        prefix_offsets,
+    )
+
+    df = spark.createDataFrame(rows, "k int, v int, id int, w int")
     order = [F.col("v").desc(), F.col("id").asc()]
     got = {
-        (r["v"], r["id"]): r["pos"]
+        r["id"]: r["pos"]
         for r in global_row_number(df, order, "pos", nparts).collect()
     }
-    expected = sorted(rows, key=lambda t: (-t[0], t[1]))
+    expected = sorted(rows, key=lambda t: (-t[1], t[2]))
     assert len(got) == len(rows)
-    for i, (v, rid) in enumerate(expected, start=1):
-        assert got[(v, rid)] == i, (v, rid, got[(v, rid)], i)
+    for i, t in enumerate(expected, start=1):
+        assert got[t[2]] == i, (t, got[t[2]], i)
+
+    keys = ["k"] if keyed else []
+    weight = F.col("w") if weighted else F.lit(1)
+    bucketed = df.repartition(nparts).withColumn(
+        "b", F.floor((F.col("v") + 5) / width)
+    )
+    w = (
+        Window.partitionBy(*keys, "b")
+        .orderBy("v", "id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    run_col = (F.sum(weight).over(w) + F.col("_off")).alias("run")
+    got = {
+        r["id"]: (r["run"], r["_total"])
+        for r in prefix_offsets(bucketed, keys, "b", weight)
+        .select("id", run_col, "_total")
+        .collect()
+    }
+    run: dict = {}
+    model = {}
+    for k, _, rid, wt in sorted(rows, key=lambda t: (t[1], t[2])):
+        g = k if keyed else None
+        run[g] = run.get(g, 0) + (wt if weighted else 1)
+        model[rid] = (run[g], g)
+    assert got == {rid: (r, run[g]) for rid, (r, g) in model.items()}
+
+
+def _reads(node: ast.AST, names: set[str]) -> bool:
+    return any(
+        isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load) and n.id in names
+        for n in ast.walk(node)
+    )
+
+
+def test_one_prefix_offset_fold_in_the_package():
+    """Regrowth guard: a loop over sorted(...) that `+=`s a running total
+    and records that total on each pass is a prefix-offset fold, and the
+    package has exactly one — sorts.prefix_offsets. Fold through it
+    instead of writing a copy."""
+    from data_ingestion_poc_spark.operators import sorts
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    folds = []
+    for path in glob.glob(
+        os.path.join(repo, "data_ingestion_poc_spark", "**", "*.py"),
+        recursive=True,
+    ):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for loop in ast.walk(tree):
+            if not (
+                isinstance(loop, ast.For)
+                and getattr(getattr(loop.iter, "func", None), "id", "") == "sorted"
+            ):
+                continue
+            totals = {
+                stmt.target.id
+                for stmt in loop.body
+                if isinstance(stmt, ast.AugAssign)
+                and isinstance(stmt.op, ast.Add)
+                and isinstance(stmt.target, ast.Name)
+            }
+            if any(
+                _reads(
+                    stmt.value if isinstance(stmt, ast.AugAssign) else stmt, totals
+                )
+                for stmt in loop.body
+            ):
+                folds.append((os.path.relpath(path, repo), loop.lineno))
+    lines, start = inspect.getsourcelines(sorts.prefix_offsets)
+    own = {
+        ("data_ingestion_poc_spark/operators/sorts.py", line)
+        for line in range(start, start + len(lines))
+    }
+    stray = [f"{path}:{line}" for path, line in folds if (path, line) not in own]
+    assert stray == [], f"prefix-offset fold outside prefix_offsets: {stray}"
+    assert len(folds) == 1
 
 
 @given(

@@ -19,6 +19,11 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+#: DuckDB's memory cap: a quarter of physical memory.
+_DUCK_MEMORY_MB = (
+    os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4 // 2**20
+)
+
 
 def _dtype_kind(dt: str) -> str:
     """Collapse a pandas dtype string to its comparison KIND. Driver
@@ -137,7 +142,10 @@ def main() -> int:
     for kv in args.conf:
         k, _, v = kv.partition("=")
         spark.conf.set(k, v)
-    con = duckdb.connect()
+    # DuckDB takes most of host memory by default; capped, an oversize
+    # oracle fails its own query with OutOfMemoryException instead of
+    # getting the process (and a concurrent Spark JVM) OOM-killed.
+    con = duckdb.connect(config={"memory_limit": f"{_DUCK_MEMORY_MB}MB"})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"

@@ -156,9 +156,6 @@ SINGLE_PARTITION_OK: dict[str, str] = {
     "corpus_mix_temperature": (
         "1-row corpus total + 1-row weight-sum scalars (partial rows only)"
     ),
-    "corpus_token_budget": "bounded bucket-offset prefix-sum frame",
-    "corpus_pack_manifest": "bounded bucket-offset prefix-sum frame",
-    "corpus_pack_blocks": "bounded bucket-offset prefix-sum frame",
     "text_tfidf": "1-row corpus doc-count for the idf denominator",
     "text_perplexity_ngram": (
         "1-row (N, vocab) LM normalizer broadcast to both scoring branches"
@@ -318,7 +315,6 @@ SINGLE_PARTITION_OK: dict[str, str] = {
     "join_bloom_pruned": "bloom-filter build: partial bloom states, one per partition",
     "sql_cte_subquery": "1-row scalar subquery inside the CTE",
     "win_ratio_to_report": "1-row global spend denominator (crossJoin broadcast)",
-    "sort_multi_key": "prefix-sum over the partition-count frame (one row per range partition)",
     "sort_pareto_skyline": (
         "prefix-min window over the price-domain frame (1-dp lattice on "
         "[900, 999.9]: <=1000 rows at any corpus size)"
@@ -675,8 +671,8 @@ SINGLE_PARTITION_OK: dict[str, str] = {
     # carries one partial-aggregate row per upstream partition.
     "embed_pca_contract": "1-row contract frame (global count/avg partials)",
     "corpus_heaps_law": (
-        "bounded 10-row bucket frame (cumulative sums + regr fit) plus "
-        "global_row_number's partition-count prefix sum; 1-row corpus total"
+        "bounded 10-row bucket frame (cumulative sums + regr fit); "
+        "1-row corpus total"
     ),
     "scan_range_clustered_contract": "1-row contract frame (independent COUNT(*) partials)",
     "scan_zorder_clustered_contract": "1-row contract frame (independent COUNT(*) partials)",
