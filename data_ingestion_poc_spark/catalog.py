@@ -6,20 +6,26 @@ pushdown / column pruning for free; at 100 TB these would be external tables
 with partition columns, and the same accessors would resolve through the
 metastore instead of paths.
 
+Session registries. A value derived from a table file is kept per session
+in a module dict, keyed by ``spark.sparkContext.applicationId`` plus a path,
+next to a fingerprint of the files it read: ``(path, size, st_mtime_ns)`` of
+the table file, or of every file under a directory table. Each access stats
+the files again and rebuilds when the fingerprint differs, replacing the
+entry in place (and unpersisting a replaced persisted DataFrame), so a dict
+holds one entry per session and key. ``_session_entry`` is that rule, and
+every registry goes through it: ``_SCHEMAS`` here, and the four
+documents-derived frame caches in ``llm/dedup.py``. The rule needs a local
+``os.stat``: a path the driver cannot stat (a non-local store) is rebuilt on
+every call, and a rewrite that keeps a file's size and mtime is not seen.
+
 Schema registry. Inferring a parquet table's schema runs one Spark job that
-reads the footers, so ``_SCHEMAS`` keeps each table's raw schema (before ``normalize_event_ts``), keyed by
-``(spark.sparkContext.applicationId, absolute table path)``, next to a
-fingerprint of the files read: ``(path, size, st_mtime_ns)`` of the table
-file, or of every file under a directory table. Each access stats the files
-again and re-infers when the fingerprint differs, replacing the entry in
-place, so the dict holds one entry per session and path. The key carries no
-conf values: the only inference-relevant conf, ``nanosAsLong``, is pinned by
-``ensure_session_confs`` before every read. What is cached is a schema, not
-a DataFrame: each call still returns a fresh ``spark.read.schema(...)``
-relation with new attribute ids, so self-joins of one table (two ``nation``
-frames) stay unambiguous. The rule needs a local ``os.stat``: a path the
-driver cannot stat (a non-local store) is inferred on every call, and a
-rewrite that keeps a file's size and mtime is not seen.
+reads the footers, so ``_SCHEMAS`` keeps each table's raw schema (before
+``normalize_event_ts``), keyed by ``(applicationId, absolute table path)``.
+The key carries no conf values: the only inference-relevant conf,
+``nanosAsLong``, is pinned by ``ensure_session_confs`` before every read.
+What is cached is a schema, not a DataFrame: each call still returns a
+fresh ``spark.read.schema(...)`` relation with new attribute ids, so
+self-joins of one table (two ``nation`` frames) stay unambiguous.
 """
 
 from __future__ import annotations
@@ -82,19 +88,40 @@ def ensure_session_confs(spark: SparkSession) -> None:
 
 
 #: (applicationId, absolute table path) -> (file fingerprint, raw schema)
-_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+_SCHEMAS: dict[tuple[str, str], tuple[tuple | None, StructType]] = {}
 
 
-def _fingerprint(path: str) -> tuple:
+def _fingerprint(path: str) -> tuple | None:
     """``(path, size, st_mtime_ns)`` of the table file, or of every file
-    under a directory table. Raises OSError where ``path`` cannot be
-    stat'ed."""
-    if os.path.isdir(path):
-        files = sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
-    else:
-        files = [path]
-    stats = [(f, os.stat(f)) for f in files]
+    under a directory table; None where ``path`` cannot be stat'ed."""
+    try:
+        if os.path.isdir(path):
+            files = sorted(
+                os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+            )
+        else:
+            files = [path]
+        stats = [(f, os.stat(f)) for f in files]
+    except OSError:
+        return None
     return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
+
+
+def _session_entry(registry: dict, key: tuple, path: str, build):
+    """``registry[key]``'s value if ``path``'s fingerprint still matches the
+    stored one, else ``build()``'s, stored as ``(fingerprint, value)`` in
+    place of the old entry (module docstring). A replaced DataFrame is
+    unpersisted; an unstat-able path matches nothing, so it is rebuilt on
+    every call."""
+    fingerprint = _fingerprint(path)
+    hit = registry.get(key)
+    if hit is not None and fingerprint is not None and hit[0] == fingerprint:
+        return hit[1]
+    value = build()
+    if hit is not None and isinstance(hit[1], DataFrame):
+        hit[1].unpersist()
+    registry[key] = (fingerprint, value)
+    return value
 
 
 def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
@@ -105,17 +132,13 @@ def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, os.path.abspath(path))
-    try:
-        fingerprint = _fingerprint(key[1])
-    except OSError:
-        return spark.read.parquet(path).schema
-    hit = _SCHEMAS.get(key)
-    if hit is not None and hit[0] == fingerprint:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    _SCHEMAS[key] = (fingerprint, schema)
-    return schema
+    abspath = os.path.abspath(path)
+    return _session_entry(
+        _SCHEMAS,
+        (spark.sparkContext.applicationId, abspath),
+        abspath,
+        lambda: spark.read.parquet(path).schema,
+    )
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

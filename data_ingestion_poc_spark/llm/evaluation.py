@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import fanout_repartition, load
 from ..registry import register
-from .dedup import dedup_minhash
+from .dedup import dedup_minhash, dot_double, sq_l2
 from .similarity import sim_search_ann, sim_search_ann_multiprobe, sim_search_knn
 
 
@@ -221,7 +221,7 @@ def dedup_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from .dedup import dedup_embedding_cosine, dot_double
+    from .dedup import dedup_embedding_cosine
 
     t = load(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
@@ -456,14 +456,13 @@ def _pq_recall_oracle() -> str:
     """
 
 
-@register("sim_search_pq_recall", oracle=_pq_recall_oracle())
-def sim_search_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of product-quantization ANN vs exact EUCLIDEAN top-10
-    (PQ approximates squared L2, so the ground truth here is
-    list_distance order, not the cosine order the LSH eval uses). The
-    per-query recall quantifies what the ~100x compression costs — the
-    number a 100 TB deployment watches when tuning PQ_M/PQ_K."""
-    from .similarity import sim_search_pq
+def _top10_panel(spark: SparkSession, sf_dir: str, order) -> DataFrame:
+    """(query_id, neighbor_id) of the 10 corpus vectors ranked first by
+    `order` (then vec_id) for each of the 5 query vectors (vec_id < 5),
+    excluding the query itself. `order` reads the query vector as "qe"
+    and the corpus vector as "e", both array<double>. The 5 query
+    vectors broadcast against one corpus scan, never a self-join."""
+    from pyspark.sql.window import Window
 
     t = load(spark, sf_dir)
     emb = t.embeddings.select(
@@ -475,6 +474,46 @@ def sim_search_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = emb.crossJoin(F.broadcast(q)).where(
         F.col("vec_id") != F.col("query_id")
     )
+    w = Window.partitionBy("query_id").orderBy(order, "vec_id")
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= 10)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    )
+
+
+def _recall_at_10(exact: DataFrame, approx: DataFrame, hits: str) -> DataFrame:
+    """Per-query recall@10 report of `approx` against the exact top-10
+    `exact`, both keyed (query_id, neighbor_id): exact_k, `hits` (exact
+    neighbors the approximate side also returned) and recall_pct,
+    ordered by query_id."""
+    j = exact.join(
+        approx.select("query_id", "neighbor_id", F.lit(1).alias("hit")),
+        ["query_id", "neighbor_id"],
+        "left",
+    )
+    return (
+        j.groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).alias("exact_k"),
+            F.count("hit").alias(hits),
+            F.round(F.count("hit") * 100.0 / F.count(F.lit(1)), 2).alias(
+                "recall_pct"
+            ),
+        )
+        .orderBy("query_id")
+    )
+
+
+@register("sim_search_pq_recall", oracle=_pq_recall_oracle())
+def sim_search_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@10 of product-quantization ANN vs exact EUCLIDEAN top-10
+    (PQ approximates squared L2, so the ground truth here is
+    list_distance order, not the cosine order the LSH eval uses). The
+    per-query recall quantifies what the ~100x compression costs — the
+    number a 100 TB deployment watches when tuning PQ_M/PQ_K."""
+    from .similarity import sim_search_pq
+
     # Pairwise (a-b)^2 fold, NOT the expanded q.q - 2q.e + e.e form: the
     # expansion can cancel to a tiny NEGATIVE value for near-identical
     # vectors (sqrt of which is NaN, sorted opposite to the oracle), and
@@ -484,34 +523,8 @@ def sim_search_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accumulates the same nonnegative per-element terms DuckDB does —
     # identical rounding, monotone with the sqrt (the ADVICE r4 lesson,
     # structural; same form as embed_matryoshka_recall).
-    d2 = F.aggregate(
-        F.zip_with(F.col("qe"), F.col("e"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(d2, "vec_id")
-    exact = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 10)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    pq = sim_search_pq(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    j = exact.join(pq, ["query_id", "neighbor_id"], "left")
-    return (
-        j.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("exact_k"),
-            F.count("hit").alias("pq_hits"),
-            F.round(F.count("hit") * 100.0 / F.count(F.lit(1)), 2).alias(
-                "recall_pct"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    exact = _top10_panel(spark, sf_dir, sq_l2(F.col("qe"), F.col("e")))
+    return _recall_at_10(exact, sim_search_pq(spark, sf_dir), "pq_hits")
 
 
 _ALIGNMENT_ORACLE = """
@@ -802,58 +815,13 @@ def embed_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast of 5 query vectors against one corpus scan, never a
     corpus self-join; at 100 TB the query panel stays broadcast-sized
     and the scan stays linear."""
-    t = load(spark, sf_dir)
-    emb = t.embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    e10 = _top10_panel(spark, sf_dir, sq_l2(F.col("qe"), F.col("e")))
+    t10 = _top10_panel(
+        spark,
+        sf_dir,
+        sq_l2(F.slice(F.col("qe"), 1, MRL_DIM), F.slice(F.col("e"), 1, MRL_DIM)),
     )
-    q = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    pairs = emb.crossJoin(F.broadcast(q)).where(
-        F.col("vec_id") != F.col("query_id")
-    )
-
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    from pyspark.sql.window import Window
-
-    full_w = Window.partitionBy("query_id").orderBy(
-        d2(F.col("qe"), F.col("e")), "vec_id"
-    )
-    trunc_w = Window.partitionBy("query_id").orderBy(
-        d2(
-            F.slice(F.col("qe"), 1, MRL_DIM),
-            F.slice(F.col("e"), 1, MRL_DIM),
-        ),
-        "vec_id",
-    )
-    e10 = (
-        pairs.withColumn("rk", F.row_number().over(full_w))
-        .where(F.col("rk") <= 10)
-        .select("query_id", "vec_id")
-    )
-    t10 = (
-        pairs.withColumn("rk", F.row_number().over(trunc_w))
-        .where(F.col("rk") <= 10)
-        .select("query_id", "vec_id", F.lit(1).alias("hit"))
-    )
-    j = e10.join(t10, ["query_id", "vec_id"], "left")
-    return (
-        j.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("exact_k"),
-            F.count("hit").alias("trunc_hits"),
-            F.round(F.count("hit") * 100.0 / F.count(F.lit(1)), 2).alias(
-                "recall_pct"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_at_10(e10, t10, "trunc_hits")
 
 
 def _ivfpq_recall_oracle() -> str:
@@ -897,44 +865,8 @@ def sim_search_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as the other recall evals; one 1-row-per-query report."""
     from .similarity import sim_search_ivfpq
 
-    t = load(spark, sf_dir)
-    emb = t.embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    pairs = emb.crossJoin(F.broadcast(q)).where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("qe"), F.col("e"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(d2, "vec_id")
-    exact = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 10)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    approx = sim_search_ivfpq(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    j = exact.join(approx, ["query_id", "neighbor_id"], "left")
-    return (
-        j.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("exact_k"),
-            F.count("hit").alias("ivfpq_hits"),
-            F.round(F.count("hit") * 100.0 / F.count(F.lit(1)), 2).alias(
-                "recall_pct"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    exact = _top10_panel(spark, sf_dir, sq_l2(F.col("qe"), F.col("e")))
+    return _recall_at_10(exact, sim_search_ivfpq(spark, sf_dir), "ivfpq_hits")
 
 
 def _semantic_recall_oracle() -> str:
@@ -992,25 +924,20 @@ def dedup_semantic_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load(spark, sf_dir)
     par = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     emb = t.embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     lhs = fanout_repartition(emb, par).select(
         F.col("vec_id").alias("ia"),
         F.col("v").alias("va"),
-        F.sqrt(dot(F.col("v"), F.col("v"))).alias("na"),
+        F.sqrt(dot_double(F.col("v"), F.col("v"))).alias("na"),
     )
     rhs = emb.select(
         F.col("vec_id").alias("ib"),
         F.col("v").alias("vb"),
-        F.sqrt(dot(F.col("v"), F.col("v"))).alias("nb"),
+        F.sqrt(dot_double(F.col("v"), F.col("v"))).alias("nb"),
     )
-    cos = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = dot_double(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     # no hard broadcast hint on rhs: it is the SF-scaling corpus (the
     # lint's point); locally the planner builds the same BNLJ, and at
     # scale the eval samples anchors anyway (docstring convention)
@@ -1077,60 +1004,12 @@ def sim_search_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     prices what the 32x sign-bit compression costs after Hamming
     candidate selection + raw-vector rescoring, per query; the number a
     deployment tunes BQ_CAND_K against (more candidates -> higher
-    recall, more rescoring IO)."""
+    recall, more rescoring IO). The exact side is sim_search_knn's
+    top-10, as in sim_search_recall."""
     from .similarity import sim_search_bq
 
-    t = load(spark, sf_dir)
-    emb = t.embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    pairs = emb.crossJoin(F.broadcast(q)).where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qe"), F.col("e"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    qq = F.aggregate(
-        F.zip_with(F.col("qe"), F.col("qe"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    ee = F.aggregate(
-        F.zip_with(F.col("e"), F.col("e"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cosine = dot / (F.sqrt(qq) * F.sqrt(ee))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        cosine.desc(), F.col("vec_id")
-    )
-    exact = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 10)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    bq = sim_search_bq(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    j = exact.join(bq, ["query_id", "neighbor_id"], "left")
-    return (
-        j.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("exact_k"),
-            F.count("hit").alias("bq_hits"),
-            F.round(F.count("hit") * 100.0 / F.count(F.lit(1)), 2).alias(
-                "recall_pct"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    exact = sim_search_knn(spark, sf_dir).select("query_id", "neighbor_id")
+    return _recall_at_10(exact, sim_search_bq(spark, sf_dir), "bq_hits")
 
 
 # ---------------------------------------------------------------------------
@@ -1175,19 +1054,5 @@ def sim_search_nsw_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import sim_search_nsw
 
     exact = sim_search_knn(spark, sf_dir).select("query_id", "neighbor_id")
-    ann = sim_search_nsw(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    ).withColumn("hit", F.lit(1))
-    hit = exact.join(ann, on=["query_id", "neighbor_id"], how="left")
-    return (
-        hit.groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("exact_k"),
-            F.count("hit").cast("bigint").alias("ann_hits"),
-            F.round(F.count("hit") * 100.0 / F.count(F.lit(1)), 2).alias(
-                "recall_pct"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_at_10(exact, sim_search_nsw(spark, sf_dir), "ann_hits")
 

@@ -24,8 +24,10 @@ from .dedup import (
     _dot_fold,
     _splitmix_bit,
     _topk_ids_tiled,
+    cosine_double,
     dot_double,
     row_norms,
+    sq_l2,
 )
 
 _LOG = logging.getLogger(__name__)
@@ -66,10 +68,7 @@ def sim_search_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), "label", F.col("embedding").alias("ce")
     )
     pairs = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-    cos = dot_double(F.col("qe"), F.col("ce")) / (
-        F.sqrt(dot_double(F.col("qe"), F.col("qe")))
-        * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-    )
+    cos = cosine_double(F.col("qe"), F.col("ce"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -164,21 +163,11 @@ def _hyperplane_bucket():
     """
 
     def plane_bit(b: int):
+        plane = F.array(*[
+            F.lit(1.0 if _splitmix_bit(b, i) else -1.0) for i in range(_ANN_DIM)
+        ])
         return F.when(
-            F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    F.array(*[
-                        F.lit(1.0 if _splitmix_bit(b, i) else -1.0)
-                        for i in range(_ANN_DIM)
-                    ]),
-                    lambda x, h: x.cast("double") * h,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            > 0,
-            F.lit(1),
+            dot_double(F.col("embedding"), plane) > 0, F.lit(1)
         ).otherwise(F.lit(0))
 
     return sum([plane_bit(b) * (1 << b) for b in range(_ANN_NBITS)]).cast("long")
@@ -207,10 +196,7 @@ def sim_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = c.join(F.broadcast(q), on="bucket").where(
         F.col("query_id") != F.col("neighbor_id")
     )
-    cos = dot_double(F.col("qe"), F.col("ce")) / (
-        F.sqrt(dot_double(F.col("qe"), F.col("qe")))
-        * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-    )
+    cos = cosine_double(F.col("qe"), F.col("ce"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -253,10 +239,7 @@ def sim_search_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = c.join(F.broadcast(q), on="bucket").where(
         F.col("query_id") != F.col("neighbor_id")
     )
-    cos = dot_double(F.col("qe"), F.col("ce")) / (
-        F.sqrt(dot_double(F.col("qe"), F.col("qe")))
-        * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-    )
+    cos = cosine_double(F.col("qe"), F.col("ce"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -361,10 +344,7 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("qe"),
     )
     qc = q.crossJoin(F.broadcast(cent))
-    cos_qc = dot_double(F.col("qe"), F.col("ce")) / (
-        F.sqrt(dot_double(F.col("qe"), F.col("qe")))
-        * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-    )
+    cos_qc = cosine_double(F.col("qe"), F.col("ce"))
     w_assign = Window.partitionBy("query_id").orderBy(
         F.col("cq").desc(), F.col("label")
     )
@@ -384,10 +364,7 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") == F.col("probe_label"))
         & (F.col("neighbor_id") != F.col("query_id")),
     )
-    cos = dot_double(F.col("qe"), F.col("ce")) / (
-        F.sqrt(dot_double(F.col("qe"), F.col("qe")))
-        * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-    )
+    cos = cosine_double(F.col("qe"), F.col("ce"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -438,18 +415,6 @@ _KMEANS_ORACLE = f"""
 """
 
 
-def _sq_dist(v, centroid: list[float]):
-    """Squared euclidean distance to a driver-held centroid as a Column
-    expr (monotonic with the oracle's list_distance, so argmin agrees
-    without a sqrt)."""
-    lit = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(v, lit, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-
-
 @register("embed_kmeans", oracle=_KMEANS_ORACLE)
 def embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means over the embedding corpus — the iterative-algorithm
@@ -474,10 +439,15 @@ def embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     assigned = None
     for rnd in range(_KMEANS_ROUNDS):
+        # squared distance to each driver-held centroid: monotonic with the
+        # oracle's list_distance, so the argmin agrees without a sqrt
         scored = F.array(
             *[
                 F.struct(
-                    _sq_dist(F.col("v"), cv).alias("d"), F.lit(cid).alias("cid")
+                    sq_l2(
+                        F.col("v"), F.array(*[F.lit(float(x)) for x in cv])
+                    ).alias("d"),
+                    F.lit(cid).alias("cid"),
                 )
                 for cid, cv in centroids
             ]
@@ -586,12 +556,7 @@ def _pca_top2(spark: SparkSession, sf_dir: str):
 
 def _project_expr(v):
     """Shuffle-free projection of `embedding` onto a literal vector."""
-    arr = F.array(*[F.lit(float(x)) for x in v])
-    return F.aggregate(
-        F.zip_with(F.col("embedding"), arr, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return dot_double(F.col("embedding"), F.array(*[F.lit(float(x)) for x in v]))
 
 
 @register("embed_pca_project", oracle=None)  # eigendecomposition: rows-only
@@ -736,21 +701,13 @@ PQ_SUBDIM = 16
 PQ_K = 8
 
 #: Squared L2 between two equal-length double arrays as a sequential
-#: left-to-right fold - bit-identical to the DuckDB replay below, which
-#: matters because the encode argmin compares these floats for ordering.
+#: left-to-right fold - the DuckDB twin of dedup.sq_l2, bit-identical to
+#: it, which matters because the encode argmin compares these floats for
+#: ordering.
 _SQL2_DUCK = (
     "list_sum(list_transform(list_zip({a}, {b}),"
     " x -> (x[1] - x[2]) * (x[1] - x[2])))"
 )
-
-
-def sq_l2(a, b):
-    """sum((a_i-b_i)^2) as a Column fold (same add order as the oracle)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 _PQ_ORACLE = f"""
@@ -1111,13 +1068,7 @@ def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qe",
             "label",
             "ce",
-            (
-                dot_double(F.col("qe"), F.col("ce"))
-                / (
-                    F.sqrt(dot_double(F.col("qe"), F.col("qe")))
-                    * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-                )
-            ).alias("cq"),
+            cosine_double(F.col("qe"), F.col("ce")).alias("cq"),
         )
         .withColumn("rn", F.row_number().over(w_probe))
         .where(F.col("rn") == 1)
@@ -1306,10 +1257,7 @@ def sim_search_bq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "neighbor_id",
     ).join(F.broadcast(q.select("query_id", "qe")), "query_id")
-    cos = dot_double(F.col("qe"), F.col("ce")) / (
-        F.sqrt(dot_double(F.col("qe"), F.col("qe")))
-        * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-    )
+    cos = cosine_double(F.col("qe"), F.col("ce"))
     wr = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -1381,10 +1329,7 @@ def embed_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = emb.crossJoin(F.broadcast(q)).where(
         F.col("vec_id") != F.col("anchor_id")
     )
-    cos = dot_double(F.col("qv"), F.col("v")) / (
-        F.sqrt(dot_double(F.col("qv"), F.col("qv")))
-        * F.sqrt(dot_double(F.col("v"), F.col("v")))
-    )
+    cos = cosine_double(F.col("qv"), F.col("v"))
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("cos").desc(), F.col("negative_id")
     )
@@ -1473,10 +1418,7 @@ def embed_outlier_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t.embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("ve")
     ).crossJoin(F.broadcast(cent))
-    cos = dot_double(F.col("ve"), F.col("ce")) / (
-        F.sqrt(dot_double(F.col("ve"), F.col("ve")))
-        * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-    )
+    cos = cosine_double(F.col("ve"), F.col("ce"))
     scored = e.select(
         "vec_id", F.floor(cos * 1_000_000).cast("bigint").alias("cu")
     )
@@ -1757,10 +1699,7 @@ def sim_search_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("ve"),
     )
     scored = e.crossJoin(F.broadcast(cent.withColumnRenamed("label", "cand")))
-    cq = dot_double(F.col("ve"), F.col("ce")) / (
-        F.sqrt(dot_double(F.col("ve"), F.col("ve")))
-        * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-    )
+    cq = cosine_double(F.col("ve"), F.col("ce"))
     w_assign = Window.partitionBy("vec_id").orderBy(
         F.col("cq").desc(), "cand"
     )
@@ -1883,10 +1822,7 @@ def embed_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("ve"),
     )
     scored = e.crossJoin(F.broadcast(cent.withColumnRenamed("label", "cand")))
-    cq = dot_double(F.col("ve"), F.col("ce")) / (
-        F.sqrt(dot_double(F.col("ve"), F.col("ve")))
-        * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-    )
+    cq = cosine_double(F.col("ve"), F.col("ce"))
     w_assign = Window.partitionBy("vec_id").orderBy(F.col("cq").desc(), "cand")
     assigned = (
         scored.select("vec_id", "own_label", "cand", cq.alias("cq"))
@@ -2249,10 +2185,7 @@ def embed_centroid_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("ve")
     )
     scored = e.crossJoin(F.broadcast(cent.withColumnRenamed("label", "cand")))
-    cq = dot_double(F.col("ve"), F.col("ce")) / (
-        F.sqrt(dot_double(F.col("ve"), F.col("ve")))
-        * F.sqrt(dot_double(F.col("ce"), F.col("ce")))
-    )
+    cq = cosine_double(F.col("ve"), F.col("ce"))
     w = Window.partitionBy("vec_id").orderBy(F.col("cq").desc(), "cand")
     top2 = (
         scored.select("vec_id", "cand", cq.alias("cq"))
@@ -2935,10 +2868,7 @@ def sim_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < RRF_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )
-    cos = dot_double(F.col("qe"), F.col("e")) / (
-        F.sqrt(dot_double(F.col("qe"), F.col("qe")))
-        * F.sqrt(dot_double(F.col("e"), F.col("e")))
-    )
+    cos = cosine_double(F.col("qe"), F.col("e"))
     wd = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), "vec_id"
     )

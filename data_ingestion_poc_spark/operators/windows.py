@@ -728,6 +728,24 @@ def win_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 EWMA_FRAME = 16
 
 
+def _half_life_ewma(frame):
+    """Half-decay EWMA of an array Column (oldest element first):
+    sum(frame[i] * 0.5^(n-1-i)) folded in frame order, over the weight
+    sum 2 - 0.5^(n-1). The one copy of the fold the win_ewma oracles
+    replay (EWMA_FRAME note)."""
+    n = F.size(frame)
+    weighted = F.aggregate(
+        F.zip_with(
+            frame,
+            F.sequence(F.lit(0), n - 1),
+            lambda x, i: x * F.pow(F.lit(0.5), (n - 1 - i).cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return weighted / (F.lit(2.0) - F.pow(F.lit(0.5), (n - 1).cast("double")))
+
+
 @register(
     "win_ewma",
     oracle=f"""
@@ -777,24 +795,12 @@ def win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("value", 2).alias("value"),
         "frame",
     )
-    frame = F.col("frame")
-    n = F.size(frame)
-    weighted = F.aggregate(
-        F.zip_with(
-            frame,
-            F.sequence(F.lit(0), n - 1),
-            lambda x, i: x * F.pow(F.lit(0.5), (n - 1 - i).cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wsum = F.lit(2.0) - F.pow(F.lit(0.5), (n - 1).cast("double"))
     return framed.select(
         "event_id",
         "user_id",
         "ts",
         "value",
-        F.round(weighted / wsum, 6).alias("ewma"),
+        F.round(_half_life_ewma(F.col("frame")), 6).alias("ewma"),
     )
 
 
@@ -2776,18 +2782,7 @@ def win_ewma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(*order)
             .rowsBetween(-(frame_len - 1), 0)
         )
-        frame = F.collect_list("value").over(w)
-        n = F.size(frame)
-        weighted = F.aggregate(
-            F.zip_with(
-                frame,
-                F.sequence(F.lit(0), n - 1),
-                lambda x, i: x * F.pow(F.lit(0.5), (n - 1 - i).cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return weighted / (F.lit(2.0) - F.pow(F.lit(0.5), (n - 1).cast("double")))
+        return _half_life_ewma(F.collect_list("value").over(w))
 
     fast = F.floor(ewma_col(CROSS_FAST) * 10_000)
     slow = F.floor(ewma_col(CROSS_SLOW) * 10_000)
@@ -5192,18 +5187,7 @@ def win_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = w_ord.rowsBetween(-(TRIX_FRAME - 1), 0)
 
     def ewma_of(col):
-        frame = F.collect_list(col).over(w)
-        n = F.size(frame)
-        weighted = F.aggregate(
-            F.zip_with(
-                frame,
-                F.sequence(F.lit(0), n - 1),
-                lambda v, i: v * F.pow(F.lit(0.5), (n - 1 - i).cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return weighted / (F.lit(2.0) - F.pow(F.lit(0.5), (n - 1).cast("double")))
+        return _half_life_ewma(F.collect_list(col).over(w))
 
     v1 = bars.select(
         "event_type", "day", ewma_of(F.col("cls").cast("double")).alias("e")
@@ -5445,18 +5429,7 @@ def win_elder_ray(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("day")
         .rowsBetween(-(ELDER_FRAME - 1), 0)
     )
-    frame = F.collect_list(F.col("cls").cast("double")).over(w)
-    n = F.size(frame)
-    weighted = F.aggregate(
-        F.zip_with(
-            frame,
-            F.sequence(F.lit(0), n - 1),
-            lambda v, i: v * F.pow(F.lit(0.5), (n - 1 - i).cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    ema = weighted / (F.lit(2.0) - F.pow(F.lit(0.5), (n - 1).cast("double")))
+    ema = _half_life_ewma(F.collect_list(F.col("cls").cast("double")).over(w))
     v = bars.select("event_type", "day", "hi", "lo", ema.alias("ema"))
     bull = F.col("hi") - F.col("ema")
     bear = F.col("lo") - F.col("ema")

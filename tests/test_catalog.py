@@ -1,17 +1,19 @@
-"""The catalog's schema registry: one footer-inference job per table and
+"""The catalog's session registries: one footer-inference job per table and
 session, re-inference when the files change, and a fresh relation on
-every call."""
+every call; the llm frame caches follow the same fingerprint rule."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from data_ingestion_poc_spark.catalog import table, table_schema
+from data_ingestion_poc_spark.llm.dedup import dedup_clusters, dedup_minhash
 
-from conftest import SF_SMOKE
+from conftest import SF_CORRECT, SF_SMOKE
 
 
 def _jobs_in_group(spark, group: str, fn) -> int:
@@ -46,6 +48,31 @@ def test_rewritten_table_is_read_again(spark, tmp_path):
     assert "n_extra" in table_schema(spark, sf, "nation").names
     after = table(spark, sf, "nation")
     assert sorted(r["n_extra"] for r in after.collect()) == [7, 8, 9]
+
+
+def test_rewritten_documents_rebuild_the_llm_caches(spark, tmp_path):
+    """dedup_clusters reads the session pair graph (_PAIRS_CACHE) and
+    dedup_minhash the session shingle sets (_SHINGLE_CACHE); both must see
+    a rewritten documents.parquet."""
+    for name in os.listdir(SF_CORRECT):
+        shutil.copyfile(f"{SF_CORRECT}/{name}", tmp_path / name)
+    sf = str(tmp_path)
+
+    def results():
+        return [
+            sorted(tuple(r) for r in q(spark, sf).collect())
+            for q in (dedup_clusters, dedup_minhash)
+        ]
+
+    before = results()
+    path = tmp_path / "documents.parquet"
+    docs = pq.read_table(path)
+    texts = docs.column("text").to_pylist()
+    col = docs.schema.get_field_index("text")
+    pq.write_table(docs.set_column(col, "text", pa.array(texts[1:] + texts[:1])), path)
+
+    after = results()
+    assert all(b != a for b, a in zip(before, after))
 
 
 def test_same_table_self_join_is_unambiguous(spark):

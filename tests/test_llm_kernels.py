@@ -8,7 +8,8 @@ reducers): exact equality pins, not approximate ones.
   emit) must replay a dense reference under planted exact ties at every
   tile size.
 - Zero-norm vectors fail loudly instead of diverging from the oracle.
-- The per-dimension fold exists once in the package.
+- The per-dimension fold exists once in the package, and so does each
+  Spark-column vector fold (dot, squared distance, cosine, EWMA).
 """
 
 from __future__ import annotations
@@ -198,3 +199,103 @@ def test_one_per_dimension_fold_in_the_package():
     ]
     assert stray == [], f"per-dimension fold outside the shared kernel: {stray}"
     assert len(folds) == 2
+
+
+def _is_call(node, name: str) -> bool:
+    """`node` is a call of `F.<name>` or of a bare `<name>`."""
+    func = getattr(node, "func", None)
+    return getattr(func, "attr", getattr(func, "id", None)) == name
+
+
+def _is_pair_product(lam) -> bool:
+    """A zip_with lambda `x * y`, `x.cast(..) * y.cast(..)` or
+    `(x - y) * (x - y)` over its own parameters."""
+    params = {a.arg for a in lam.args.args}
+
+    def factor(node):
+        if isinstance(node, ast.Name):
+            return node.id in params
+        if _is_call(node, "cast"):
+            return factor(node.func.value)
+        return (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Sub)
+            and factor(node.left)
+            and factor(node.right)
+        )
+
+    body = lam.body
+    return (
+        isinstance(body, ast.BinOp)
+        and isinstance(body.op, ast.Mult)
+        and factor(body.left)
+        and factor(body.right)
+    )
+
+
+def _spark_vector_fold_sites(root: str) -> dict[str, list[tuple[str, int]]]:
+    """(path, line) of every Spark-column pair fold, two-norm cosine ratio
+    and half-life EWMA zip_with in the package under `root`."""
+    found = {"fold": [], "cosine": [], "ewma": []}
+    for path in glob.glob(
+        os.path.join(root, "data_ingestion_poc_spark", "**", "*.py"),
+        recursive=True,
+    ):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        rel = os.path.relpath(path, root)
+        for node in ast.walk(tree):
+            if (
+                _is_call(node, "aggregate")
+                and node.args
+                and _is_call(node.args[0], "zip_with")
+                and isinstance(node.args[0].args[-1], ast.Lambda)
+                and _is_pair_product(node.args[0].args[-1])
+            ):
+                found["fold"].append((rel, node.lineno))
+            if (
+                isinstance(node, ast.BinOp)
+                and isinstance(node.op, ast.Div)
+                and isinstance(node.right, ast.BinOp)
+                and isinstance(node.right.op, ast.Mult)
+                and all(
+                    _is_call(side, "sqrt") and _is_call(side.args[0], "dot_double")
+                    for side in (node.right.left, node.right.right)
+                )
+            ):
+                found["cosine"].append((rel, node.lineno))
+            if _is_call(node, "zip_with") and any(
+                _is_call(sub, "pow") and ast.unparse(sub.args[0]) == "F.lit(0.5)"
+                for sub in ast.walk(node)
+            ):
+                found["ewma"].append((rel, node.lineno))
+    return found
+
+
+def test_one_spark_vector_fold_per_formula_in_the_package():
+    """Regrowth guard for the Spark-column vector folds: an aggregate over
+    a zip_with product or squared difference sits only in dedup.dot_double
+    and dedup.sq_l2, a ratio over two sqrt(dot_double) norms only in
+    dedup.cosine_double, and the half-life EWMA zip_with only in
+    windows._half_life_ewma. Call those instead of writing a copy."""
+    from data_ingestion_poc_spark.operators import windows as windows_mod
+
+    found = _spark_vector_fold_sites(REPO)
+    homes = {
+        "fold": (dedup_mod.dot_double, dedup_mod.sq_l2),
+        "cosine": (dedup_mod.cosine_double,),
+        "ewma": (windows_mod._half_life_ewma,),
+    }
+    for kind, fns in homes.items():
+        spans = []
+        for fn in fns:
+            lines, start = inspect.getsourcelines(fn)
+            path = os.path.relpath(inspect.getsourcefile(fn), REPO)
+            spans.append((path, range(start, start + len(lines))))
+        stray = [
+            f"{path}:{line}"
+            for path, line in found[kind]
+            if not any(path == p and line in span for p, span in spans)
+        ]
+        assert stray == [], f"{kind} copy outside its shared helper: {stray}"
+        assert len(found[kind]) == len(fns)

@@ -714,8 +714,29 @@ def _chain_root(node: "ast.expr") -> "ast.expr":
             return node
 
 
+#: A source line with its ending, split where the parser splits (``\r\n``,
+#: ``\r`` or ``\n``; never at a form feed), as ``ast.get_source_segment``
+#: splits.
+_SOURCE_LINE_RE = re.compile(r"[^\r\n]*(?:\r\n|\r|\n)|[^\r\n]+\Z")
+
+
+def _source_segment(lines: list[str], node: "ast.expr") -> str:
+    """``ast.get_source_segment(src, node)`` over ``src``'s pre-split
+    ``lines``: columns are UTF-8 byte offsets, as in the stdlib. The
+    stdlib call re-splits the whole module on every call."""
+    first, last = node.lineno - 1, node.end_lineno - 1
+    start, end = node.col_offset, node.end_col_offset
+    if first == last:
+        return lines[first].encode()[start:end].decode()
+    return (
+        lines[first].encode()[start:].decode()
+        + "".join(lines[first + 1 : last])
+        + lines[last].encode()[:end].decode()
+    )
+
+
 def _resolved_chain_text(
-    src: str, node: "ast.expr", assigns: dict, lineno: int, depth: int = 0
+    lines: list[str], node: "ast.expr", assigns: dict, lineno: int, depth: int = 0
 ) -> str:
     """Source text of `node` with its base Name transitively inlined from
     the latest preceding single-Name assignment — so the lint sees
@@ -723,7 +744,7 @@ def _resolved_chain_text(
     Unresolvable bases (params, imports) contribute nothing extra."""
     import ast
 
-    text = ast.get_source_segment(src, node) or ""
+    text = _source_segment(lines, node)
     if depth > 6:
         return text
     root = _chain_root(node)
@@ -732,7 +753,7 @@ def _resolved_chain_text(
         if prior:
             a_line, a_node = prior[-1]
             text = (
-                _resolved_chain_text(src, a_node, assigns, a_line, depth + 1)
+                _resolved_chain_text(lines, a_node, assigns, a_line, depth + 1)
                 + " || "
                 + text
             )
@@ -766,6 +787,7 @@ def lint_broadcast_hints(pkg_root: str) -> list[str]:
                 tree = ast.parse(src)
             except SyntaxError:
                 continue
+            lines = _SOURCE_LINE_RE.findall(src)
             # Name assignments are collected PER ENCLOSING SCOPE (module
             # body, then each FunctionDef body, never descending into a
             # nested def/class) so a variable name reused across two
@@ -814,7 +836,7 @@ def lint_broadcast_hints(pkg_root: str) -> list[str]:
                     ):
                         continue
                     chain = _resolved_chain_text(
-                        src, node.args[0], assigns, node.lineno
+                        lines, node.args[0], assigns, node.lineno
                     )
                     tm = _SF_TABLE_RE.search(chain)
                     if tm and not any(c in chain for c in _REDUCING_CALLS):
