@@ -46,17 +46,17 @@ PRELOAD_MODULES = (
     # ~0.8 s of engine+pyspark.sql modules on its first such task —
     # measured 4x on embed_hubness_ivf's cell stage (314 ms -> 1.3 s
     # of "time to run Python workers"). Importing similarity pulls
-    # dedup and catalog transitively; all are import-side-effect-free
-    # beyond oracle-string construction.
+    # dedup and catalog transitively; importing registers queries and
+    # builds text oracle strings but computes no golden oracle (golden
+    # builders run only when registry.Query asks for an oracle).
     "data_ingestion_poc_spark.llm.similarity",
     "data_ingestion_poc_spark.llm.evaluation",
     "data_ingestion_poc_spark.functions.udfs",
     # ...and every other module that defines worker-side kernels or
     # module-level functions passed to mapIn*/applyInPandas (e.g.
     # ingest.pipeline.explode_archives ships by reference). Incremental
-    # cost over the imports above, measured: multimodal 0.78 s (its own
-    # codec stack), spans 0.12 s, the rest <15 ms — all one-time per
-    # executor, COW-shared across forks.
+    # cost over the imports above, measured: each <15 ms — all one-time
+    # per executor, COW-shared across forks.
     "data_ingestion_poc_spark.llm.multimodal",
     "data_ingestion_poc_spark.llm.spans",
     "data_ingestion_poc_spark.llm.textstats",

@@ -40,22 +40,22 @@ def fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hash_native_oracle() -> str | None:
+def _hash_native_oracle(sf_dir: str) -> str | None:
     """Golden VALUES: DuckDB has no xxhash64/murmur3 analog, so the oracle
     replays Spark's exact hash algorithms in pure Python (pyhash.py, pinned
     bit-exact against the JVM by test_pyhash_matches_spark) over the same
-    documents fixture, computed from disk at import time so TESTDATA
-    regeneration cannot stale it."""
+    documents fixture, computed from `sf_dir` when first asked for so
+    TESTDATA regeneration cannot stale it."""
     import zlib
 
-    from ..goldens import ORACLE_SF_DIR, values_oracle
+    from ..goldens import values_oracle
     from .pyhash import spark_hash_columns, xxh64
 
     try:
         import pyarrow.parquet as pq
 
         tbl = pq.read_table(
-            f"{ORACLE_SF_DIR}/documents.parquet", columns=["doc_id", "text", "lang"]
+            f"{sf_dir}/documents.parquet", columns=["doc_id", "text", "lang"]
         ).to_pylist()
     except Exception:
         return None
@@ -76,7 +76,7 @@ def _hash_native_oracle() -> str | None:
     )
 
 
-@register("fn_hash_native", oracle=_hash_native_oracle())
+@register("fn_hash_native", oracle=_hash_native_oracle)
 def fn_hash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-cryptographic engine hashes — xxhash64 is the cheap shuffle-key
     / dedup-key at scale (8 bytes, JVM-side, no UDF). Oracle: golden

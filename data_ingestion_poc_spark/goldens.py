@@ -3,17 +3,21 @@
 Some operators read the fixture files themselves (binaryFile scans,
 multimodal decode stages) or apply engine-native hashes DuckDB cannot
 replay. Their strongest possible oracle is a VALUES table of the exact
-expected rows, derived at import time from the same bytes the query will
-read. Computing the goldens dynamically (instead of hardcoding, as r2's
+expected rows, derived from the same bytes the query will read.
+Computing the goldens dynamically (instead of hardcoding, as r2's
 scan_binary_meta did) keeps them correct when the driver regenerates
 TESTDATA between rounds — which happened in r3 (events.ts switched from
 TIMESTAMP(NANOS) to timestamp[us], shifting several file sizes).
 
-The driver's correctness gate runs at sf0.01, so goldens are pinned to
-that directory (override with SPARK_GRAFT_ORACLE_SF_DIR for local runs
-against another scale). Builders return None when the fixtures are
-missing, which downgrades the query to a rows-only check instead of
-failing the import.
+Each builder takes the scale-factor directory it reads (`sf_dir`) and is
+registered uncalled (``@register(name, oracle=_builder)``); the registry
+calls it the first time that query's oracle is asked for at a scale and
+memoizes the string per (name, sf_dir), so importing or registering
+computes nothing. ``Query.oracle`` resolves at ORACLE_SF_DIR (the
+driver's correctness gate runs at sf0.01; SPARK_GRAFT_ORACLE_SF_DIR
+overrides that default); tools resolve at the scale they run with
+``Query.oracle_at(sf_dir)``. Builders return None when the fixtures are
+missing, which downgrades the query to a rows-only check.
 """
 
 from __future__ import annotations
@@ -21,11 +25,11 @@ from __future__ import annotations
 import glob
 import os
 
-#: The scale-factor directory the driver evaluates oracles against.
+#: The scale-factor directory ``Query.oracle`` resolves golden builders at.
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
-def fixture_parquets(sf_dir: str = ORACLE_SF_DIR) -> list[str]:
+def fixture_parquets(sf_dir: str) -> list[str]:
     """Sorted fixture parquet paths (the blobs binaryFile scans read)."""
     return sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
 

@@ -14,6 +14,8 @@ Scale ladder:
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -432,31 +434,21 @@ def _shingled_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _documents_cached(_SHINGLE_CACHE, spark, sf_dir, build)
 
 
-_MINHASH_GOLDEN: dict[str, list[tuple[int, int, float]] | None] = {}
-
-
-_BUCKET_REPLAY: dict = {}
-
-
-def _replay_band_buckets() -> tuple[dict, dict] | None:
-    """Pure-Python replay of shingling + banding over the oracle
-    fixture: (shingle_sets by doc_id, bucket -> member doc_ids by
+@functools.cache
+def _replay_band_buckets(sf_dir: str) -> tuple[dict, dict] | None:
+    """Pure-Python replay of shingling + banding over the fixture in
+    `sf_dir`: (shingle_sets by doc_id, bucket -> member doc_ids by
     (band, key)). Shared by minhash_golden_pairs and the band-skew
-    audit golden; memoized per import."""
+    audit golden; memoized per `sf_dir`."""
     import pyarrow.parquet as pq
 
     from ..functions.pyhash import spark_hash_long_array, xxh64, xxh64_int
-    from ..goldens import ORACLE_SF_DIR
-
-    if ORACLE_SF_DIR in _BUCKET_REPLAY:
-        return _BUCKET_REPLAY[ORACLE_SF_DIR]
 
     try:
         docs = pq.read_table(
-            f"{ORACLE_SF_DIR}/documents.parquet", columns=["doc_id", "text"]
+            f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
         ).to_pylist()
     except Exception:
-        _BUCKET_REPLAY[ORACLE_SF_DIR] = None
         return None
 
     m64 = (1 << 64) - 1
@@ -485,28 +477,23 @@ def _replay_band_buckets() -> tuple[dict, dict] | None:
         for b in range(MINHASH_BANDS):
             key = spark_hash_long_array(sig[b * _ROWS_PER_BAND : (b + 1) * _ROWS_PER_BAND])
             buckets.setdefault((b, key), []).append(r["doc_id"])
-    _BUCKET_REPLAY[ORACLE_SF_DIR] = (shingle_sets, buckets)
     return shingle_sets, buckets
 
 
-def minhash_golden_pairs() -> list[tuple[int, int, float]] | None:
+@functools.cache
+def minhash_golden_pairs(sf_dir: str) -> list[tuple[int, int, float]] | None:
     """Replay the ENTIRE banded-MinHash pipeline in pure Python over the
-    oracle fixture: same shingling, the same 32 chained xxhash64 values
+    fixture in `sf_dir`: same shingling, the same 32 chained xxhash64 values
     per shingle (pyhash.py ports, pinned bit-exact vs the JVM), the same
     8x4 band keys via Spark's array-fold murmur3, the same exact-Jaccard
     verification of collided pairs. The result is the exact row set the
     Spark operator must produce — turning the one 'rows-only by design'
-    LSH query into a golden-VALUES check. Memoized per import; per-shingle
-    signatures are shared across docs (~16k distinct shingles at sf0.01,
-    so the replay costs ~1-2 s once)."""
-    from ..goldens import ORACLE_SF_DIR
-
-    if ORACLE_SF_DIR in _MINHASH_GOLDEN:  # two oracles consume the replay
-        return _MINHASH_GOLDEN[ORACLE_SF_DIR]
-
-    replay = _replay_band_buckets()
+    LSH query into a golden-VALUES check. Memoized per `sf_dir` (several
+    oracles consume the replay); per-shingle signatures are shared across
+    docs (~16k distinct shingles at sf0.01, so the replay costs ~1-2 s
+    once)."""
+    replay = _replay_band_buckets(sf_dir)
     if replay is None:
-        _MINHASH_GOLDEN[ORACLE_SF_DIR] = None
         return None
     shingle_sets, buckets = replay
 
@@ -527,14 +514,13 @@ def minhash_golden_pairs() -> list[tuple[int, int, float]] | None:
                 Decimal(repr(jac)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
             )
             out.append((a, b, rounded))
-    _MINHASH_GOLDEN[ORACLE_SF_DIR] = out
     return out
 
 
-def _minhash_oracle() -> str | None:
+def _minhash_oracle(sf_dir: str) -> str | None:
     from ..goldens import values_oracle
 
-    pairs = minhash_golden_pairs()
+    pairs = minhash_golden_pairs(sf_dir)
     if pairs is None:
         return None
     return values_oracle(
@@ -582,7 +568,7 @@ def band_keys(shingled: DataFrame) -> DataFrame:
     ).select("doc_id", "bk.band", "bk.key")
 
 
-@register("dedup_minhash", oracle=_minhash_oracle())
+@register("dedup_minhash", oracle=_minhash_oracle)
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded MinHash LSH near-dup pairs, all in JVM Column expressions:
     shingle -> 32 seeded xxhash64 minhashes -> 8 band keys -> self
@@ -1367,13 +1353,13 @@ def dedup_fuzzy_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_incremental_oracle() -> str | None:
+def _minhash_incremental_oracle(sf_dir: str) -> str | None:
     """Golden pairs derived from the SAME pyhash full-pipeline replay as
     dedup_minhash's oracle, restricted to pairs with exactly one endpoint
     in the delta (doc_id % 5 == 4) and re-oriented as (new_doc, old_doc)."""
     from ..goldens import values_oracle
 
-    pairs = minhash_golden_pairs()
+    pairs = minhash_golden_pairs(sf_dir)
     if pairs is None:
         return None
     rows = []
@@ -1390,7 +1376,7 @@ def _minhash_incremental_oracle() -> str | None:
     )
 
 
-@register("dedup_minhash_incremental", oracle=_minhash_incremental_oracle())
+@register("dedup_minhash_incremental", oracle=_minhash_incremental_oracle)
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup detection: dedup a NEW BATCH (the delta,
     here docs with doc_id % 5 == 4 standing in for today's crawl)
@@ -2729,12 +2715,12 @@ def dedup_candidate_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _band_skew_golden() -> str | None:
+def _band_skew_golden(sf_dir: str) -> str | None:
     """Golden VALUES for dedup_band_skew_audit via the shared pure-Python
     banding replay (bit-exact vs the JVM, the dedup_minhash precedent)."""
     from ..goldens import values_oracle
 
-    replay = _replay_band_buckets()
+    replay = _replay_band_buckets(sf_dir)
     if replay is None:
         return None
     _shingle_sets, buckets = replay
@@ -2773,7 +2759,7 @@ def _band_skew_golden() -> str | None:
     )
 
 
-@register("dedup_band_skew_audit", oracle=_band_skew_golden())
+@register("dedup_band_skew_audit", oracle=_band_skew_golden)
 def dedup_band_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Operational health audit of the banded-MinHash index BEFORE the
     candidate join runs: per band, the bucket-size distribution folded

@@ -32,7 +32,7 @@ from .dedup import dedup_minhash, dot_double, sq_l2
 from .similarity import sim_search_ann, sim_search_ann_multiprobe, sim_search_knn
 
 
-def _minhash_recall_oracle() -> str | None:
+def _minhash_recall_oracle(sf_dir: str) -> str | None:
     """Two-sided oracle: the exact ground truth replays in SQL (the
     dedup_ngram_jaccard oracle) and the LSH candidate side is the golden
     pair set from the pure-Python pipeline replay (dedup.py
@@ -40,7 +40,7 @@ def _minhash_recall_oracle() -> str | None:
     a full value-hash check, not rows-only."""
     from .dedup import _JACCARD_ORACLE, minhash_golden_pairs
 
-    pairs = minhash_golden_pairs()
+    pairs = minhash_golden_pairs(sf_dir)
     if not pairs:
         return None
     vals = ",\n      ".join(f"({a}, {b})" for a, b, _ in pairs)
@@ -55,7 +55,7 @@ def _minhash_recall_oracle() -> str | None:
     """
 
 
-@register("dedup_minhash_recall", oracle=_minhash_recall_oracle())
+@register("dedup_minhash_recall", oracle=_minhash_recall_oracle)
 def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of banded MinHash LSH vs the exact shingle-Jaccard dedup.
 
@@ -618,10 +618,10 @@ def embed_text_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONSENSUS_SIMHASH_HAM = 8
 
 
-def _consensus_oracle() -> str | None:
+def _consensus_oracle(sf_dir: str) -> str | None:
     from .dedup import _JACCARD_ORACLE, _SIMHASH_ORACLE, _minhash_oracle
 
-    mh = _minhash_oracle()
+    mh = _minhash_oracle(sf_dir)
     if mh is None:
         return None
     return f"""
@@ -664,7 +664,7 @@ def _consensus_oracle() -> str | None:
     """
 
 
-@register("dedup_consensus", oracle=_consensus_oracle())
+@register("dedup_consensus", oracle=_consensus_oracle)
 def dedup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Method-consensus report across the dedup ladder: every candidate
     pair any detector fires on, with per-method flags (exact hash,

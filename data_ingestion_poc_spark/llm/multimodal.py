@@ -85,27 +85,28 @@ def extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows)
 
 
-def _read_fixture_blobs() -> list[tuple[str, bytes]]:
+def _read_fixture_blobs(sf_dir: str) -> list[tuple[str, bytes]]:
     from ..goldens import fixture_parquets
 
     out = []
-    for p in fixture_parquets():
+    for p in fixture_parquets(sf_dir):
         with open(p, "rb") as fh:
             out.append((p.rsplit("/", 1)[-1], fh.read()))
     return out
 
 
-def _binary_oracle() -> str | None:
+def _binary_oracle(sf_dir: str) -> str | None:
     """Golden VALUES: replay _fake_decode in plain Python over the same
-    fixture bytes the binaryFile scan reads. Computed from disk at import
-    so TESTDATA regeneration between rounds cannot stale it. This checks
+    fixture bytes the binaryFile scan reads. Computed from the files in
+    `sf_dir` when first asked for, so TESTDATA regeneration between rounds
+    cannot stale it. This checks
     the ENTIRE Spark path (binaryFile scan -> Arrow batching ->
     mapInPandas -> schema projection) against an engine-free reference —
     the strongest oracle available for a non-SQL pipeline."""
     from ..goldens import values_oracle
 
     try:
-        blobs = _read_fixture_blobs()
+        blobs = _read_fixture_blobs(sf_dir)
     except OSError:
         return None
     rows = []
@@ -120,7 +121,7 @@ def _binary_oracle() -> str | None:
     )
 
 
-@register("multimodal_binary", oracle=_binary_oracle())
+@register("multimodal_binary", oracle=_binary_oracle)
 def multimodal_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media-as-rows pipeline: binaryFile scan -> mapInPandas feature
     extraction (typed FEATURE_SCHEMA) -> flat feature columns. Uses the
@@ -185,13 +186,13 @@ def sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows)
 
 
-def _framesample_oracle() -> str | None:
+def _framesample_oracle(sf_dir: str) -> str | None:
     """Golden VALUES replay of the 1->N frame fan-out (see _binary_oracle
     rationale)."""
     from ..goldens import values_oracle
 
     try:
-        blobs = _read_fixture_blobs()
+        blobs = _read_fixture_blobs(sf_dir)
     except OSError:
         return None
     rows = []
@@ -206,7 +207,7 @@ def _framesample_oracle() -> str | None:
     )
 
 
-@register("multimodal_framesample", oracle=_framesample_oracle())
+@register("multimodal_framesample", oracle=_framesample_oracle)
 def multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-frame sampling pipeline: binaryFile scan -> mapInPandas
     frame fan-out (stubbed codec, real plumbing) -> per-frame rows ready
@@ -282,13 +283,13 @@ def make_thumbnails(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows)
 
 
-def _resize_oracle() -> str | None:
+def _resize_oracle(sf_dir: str) -> str | None:
     """Golden VALUES replay of the aspect-preserving resize math (see
     _binary_oracle rationale)."""
     from ..goldens import values_oracle
 
     try:
-        blobs = _read_fixture_blobs()
+        blobs = _read_fixture_blobs(sf_dir)
     except OSError:
         return None
     rows = []
@@ -305,7 +306,7 @@ def _resize_oracle() -> str | None:
     )
 
 
-@register("multimodal_resize", oracle=_resize_oracle())
+@register("multimodal_resize", oracle=_resize_oracle)
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-resize pipeline (thumbnail generation): binaryFile scan ->
     mapInPandas aspect-preserving resize (stubbed codec; the target-dim
@@ -443,13 +444,13 @@ def audio_frame_stats(batches):
         )
 
 
-def _audio_oracle() -> str | None:
+def _audio_oracle(sf_dir: str) -> str | None:
     """Golden VALUES: pure-Python replay of the same int16 framing over
     the fixture bytes (the multimodal_binary oracle discipline)."""
     from ..goldens import values_oracle
 
     try:
-        blobs = _read_fixture_blobs()
+        blobs = _read_fixture_blobs(sf_dir)
     except OSError:
         return None
     rows = []
@@ -471,7 +472,7 @@ def _audio_oracle() -> str | None:
     )
 
 
-@register("multimodal_audio_framestats", oracle=_audio_oracle())
+@register("multimodal_audio_framestats", oracle=_audio_oracle)
 def multimodal_audio_framestats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio frame analytics over opaque binary columns: binaryFile scan
     -> mapInArrow framing/stats (stubbed codec, real plumbing) -> one row
@@ -545,8 +546,8 @@ def _ahash_variants(blobs: list[tuple[str, bytes]]) -> list[tuple[str, int]]:
     return out
 
 
-def _ahash_rows() -> list[tuple]:
-    blobs = _read_fixture_blobs()
+def _ahash_rows(sf_dir: str) -> list[tuple]:
+    blobs = _read_fixture_blobs(sf_dir)
     sigs = _ahash_variants(blobs)
     out = []
     for i, (na, sa) in enumerate(sigs):
@@ -562,11 +563,11 @@ def _ahash_rows() -> list[tuple]:
     return sorted(out)
 
 
-def _image_dedup_oracle() -> str | None:
+def _image_dedup_oracle(sf_dir: str) -> str | None:
     from ..goldens import values_oracle
 
     try:
-        rows = _ahash_rows()
+        rows = _ahash_rows(sf_dir)
     except OSError:
         return None
     return values_oracle(
@@ -598,7 +599,7 @@ def ahash_batches(batches):
         )
 
 
-@register("multimodal_image_dedup", oracle=_image_dedup_oracle())
+@register("multimodal_image_dedup", oracle=_image_dedup_oracle)
 def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-dup: average-hash signatures (stubbed
     decode, real hash/banding) paired by banded Hamming — the image-side
@@ -708,13 +709,13 @@ def _scene_rows(name: str, blob: bytes) -> list[tuple]:
     return out
 
 
-def _scenecut_oracle() -> str | None:
+def _scenecut_oracle(sf_dir: str) -> str | None:
     """Golden VALUES replay of frame-stat + cut detection (see
     _binary_oracle rationale)."""
     from ..goldens import values_oracle
 
     try:
-        blobs = _read_fixture_blobs()
+        blobs = _read_fixture_blobs(sf_dir)
     except OSError:
         return None
     rows = []
@@ -739,7 +740,7 @@ def _scenecut_oracle() -> str | None:
     )
 
 
-@register("multimodal_video_scenecut", oracle=_scenecut_oracle())
+@register("multimodal_video_scenecut", oracle=_scenecut_oracle)
 def multimodal_video_scenecut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video scene segmentation: binaryFile scan -> mapInPandas frame
     stats (stubbed codec, real Arrow plumbing) -> WINDOW-side cut
@@ -818,12 +819,12 @@ def _vad_rows(name: str, samples) -> list[tuple]:
     ]
 
 
-def _vad_oracle() -> str | None:
+def _vad_oracle(sf_dir: str) -> str | None:
     """Golden VALUES replay of energy gate + run-length segmentation."""
     from ..goldens import values_oracle
 
     try:
-        blobs = _read_fixture_blobs()
+        blobs = _read_fixture_blobs(sf_dir)
     except OSError:
         return None
     rows = []
@@ -848,7 +849,7 @@ def _vad_oracle() -> str | None:
     )
 
 
-@register("multimodal_audio_vad", oracle=_vad_oracle())
+@register("multimodal_audio_vad", oracle=_vad_oracle)
 def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Voice-activity segments over opaque audio blobs: the mapInArrow
     frame stats (multimodal_audio_framestats' stage, unchanged) feed an

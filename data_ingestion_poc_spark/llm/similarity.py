@@ -807,10 +807,10 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     scored = (
-        enc.join(
-            F.broadcast(lut),
-            (enc.m == lut.m) & (enc.code == lut.code)
-            & (enc.vec_id != lut.query_id),
+        enc.alias("e").join(
+            F.broadcast(lut.alias("l")),
+            (F.col("e.m") == F.col("l.m")) & (F.col("e.code") == F.col("l.code"))
+            & (F.col("e.vec_id") != F.col("l.query_id")),
         )
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d2").alias("adist"))
@@ -1098,12 +1098,12 @@ def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         sq_l2(F.col("sv"), F.col("cw")).alias("d2"),
     )
     scored = (
-        enc.join(
-            F.broadcast(lut),
-            (enc.m == lut.m)
-            & (enc.code == lut.code)
-            & (enc.label == lut.probe_label)
-            & (enc.vec_id != lut.query_id),
+        enc.alias("e").join(
+            F.broadcast(lut.alias("l")),
+            (F.col("e.m") == F.col("l.m"))
+            & (F.col("e.code") == F.col("l.code"))
+            & (F.col("e.label") == F.col("l.probe_label"))
+            & (F.col("e.vec_id") != F.col("l.query_id")),
         )
         .groupBy("query_id", "probe_label", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d2").alias("adist"))

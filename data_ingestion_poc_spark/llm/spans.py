@@ -328,16 +328,16 @@ def bpe_merges_python(texts: list[str], rounds: int = BPE_ROUNDS) -> list[tuple]
     return rows
 
 
-def _bpe_train_golden() -> str | None:
+def _bpe_train_golden(sf_dir: str) -> str | None:
     """Golden VALUES oracle: replay the greedy merge loop in pure Python
     over the fixture corpus (goldens.py pattern — computed from the bytes
-    on disk at import, so driver-side fixture regeneration cannot stale
-    it)."""
+    in `sf_dir` when first asked for, so driver-side fixture regeneration
+    cannot stale it)."""
     import os
 
-    from ..goldens import ORACLE_SF_DIR, values_oracle
+    from ..goldens import values_oracle
 
-    path = os.path.join(ORACLE_SF_DIR, "documents.parquet")
+    path = os.path.join(sf_dir, "documents.parquet")
     if not os.path.exists(path):
         return None
     import duckdb
@@ -356,7 +356,7 @@ def _bpe_train_golden() -> str | None:
     )
 
 
-@register("text_bpe_train", oracle=_bpe_train_golden())
+@register("text_bpe_train", oracle=_bpe_train_golden)
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative BPE merge training (Sennrich et al. 2016) at word
     granularity: {BPE_ROUNDS} rounds of count-adjacent-pairs ->
@@ -463,12 +463,12 @@ def bpe_encode_python(texts: list[str], rounds: int = BPE_ROUNDS) -> list[tuple]
     ]
 
 
-def _bpe_encode_golden() -> str | None:
+def _bpe_encode_golden(sf_dir: str) -> str | None:
     import os
 
-    from ..goldens import ORACLE_SF_DIR, values_oracle
+    from ..goldens import values_oracle
 
-    path = os.path.join(ORACLE_SF_DIR, "documents.parquet")
+    path = os.path.join(sf_dir, "documents.parquet")
     if not os.path.exists(path):
         return None
     import duckdb
@@ -491,7 +491,7 @@ def _bpe_encode_golden() -> str | None:
     )
 
 
-@register("text_bpe_encode", oracle=_bpe_encode_golden())
+@register("text_bpe_encode", oracle=_bpe_encode_golden)
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer APPLICATION at corpus scale: re-learn the BPE_ROUNDS
     merge table (text_bpe_train's loop) and encode every document with

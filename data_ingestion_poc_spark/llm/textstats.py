@@ -1568,7 +1568,7 @@ ZLIB_LEVEL = 6
 
 def _zratio_u_py(text: str) -> int:
     """floor(1e4 * len(zlib(text)) / len(text)) — the shared scalar both
-    the executor batches and the import-time golden replay run."""
+    the executor batches and the golden replay run."""
     import zlib
 
     enc = text.encode("utf-8")
@@ -1577,17 +1577,17 @@ def _zratio_u_py(text: str) -> int:
     return len(zlib.compress(enc, ZLIB_LEVEL)) * 10_000 // len(enc)
 
 
-def _compression_golden() -> str | None:
+def _compression_golden(sf_dir: str) -> str | None:
     """Golden VALUES per source from the oracle fixture bytes (the
     dedup_minhash replay precedent: DuckDB has no zlib, so the oracle
     is the same deterministic computation run in pure Python)."""
     import pyarrow.parquet as pq
 
-    from ..goldens import ORACLE_SF_DIR, values_oracle
+    from ..goldens import values_oracle
 
     try:
         docs = pq.read_table(
-            f"{ORACLE_SF_DIR}/documents.parquet", columns=["source", "text"]
+            f"{sf_dir}/documents.parquet", columns=["source", "text"]
         ).to_pylist()
     except Exception:
         return None
@@ -1619,7 +1619,7 @@ def _compression_golden() -> str | None:
     )
 
 
-@register("text_compression_ratio", oracle=_compression_golden())
+@register("text_compression_ratio", oracle=_compression_golden)
 def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source compressibility profile: zlib(text)/len(text) folded
     to mean, min and the share of docs below {COMPRESSIBLE_MAX_U/1e4}

@@ -21,7 +21,9 @@ convenience choice the reference makes for its digest-based dedup
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -180,6 +182,59 @@ _PAGERANK_ORACLE = (
 )
 
 
+def _weighted_inflow(
+    spark: SparkSession,
+    sf_dir: str,
+    rounds: int,
+    contrib: str,
+    start: Callable[[DataFrame], tuple[Column, Column]],
+) -> DataFrame:
+    """(node, units) after `rounds` weighted-inflow rounds over the
+    undirected purchase graph, in exact BIGINT: each round every edge
+    src -> dst carries the SQL expression `contrib` of the src's `units`,
+    the edge weight `w` and the src's out-weight `wsum`; contributions
+    sum per dst into `inflow`, and every node (teleport-only ones
+    included, inflow NULL) takes the `update` column. `start(nodes)`
+    returns (round-0 units, update). graph_pagerank and
+    graph_katz_centrality differ only in those expressions.
+
+    Plan shape per round: edges hash-partition on dst ONCE so every
+    round's contribution groupBy(dst) reuses the cached layout, and the
+    node-sized frames (units, outsum, contrib) are broadcast into the
+    edge-sized joins — a mapPartitions over cached edges + one
+    partition-local hash agg, ZERO per-round exchanges of edge rows (the
+    r13 driver measured this loop at 5.5-6.9 s with two shuffle joins
+    per round). The broadcast hints are size-dispatched off table stats
+    (_node_bcast): node-sized frames scale with SF, and a forced hint at
+    100 TB is a driver OOM. outsum is persisted — broadcast(outsum)
+    otherwise re-executed its groupBy over the edge cache every round.
+    Folding wsum onto the edge rows themselves (via a window or a
+    pre-join) was tried and REJECTED: it made the COLD edge
+    materialization ~4 s slower (an edge-sized sort / a broadcast build
+    racing the cache) for the same warm per-round plan."""
+    bc = _node_bcast(spark, sf_dir)
+    edges = _both_directions(_purchase_pairs(load(spark, sf_dir)))
+    edges = edges.repartition("dst").persist()
+    outsum = (
+        edges.groupBy("src").agg(F.sum("w").alias("wsum")).persist()
+    )
+    nodes = edges.select(F.col("src").alias("node")).distinct().persist()
+    units0, update = start(nodes)
+    ranks = nodes.select("node", units0.cast("long").alias("units"))
+    for _ in range(rounds):
+        inflow = (
+            edges.join(bc(ranks), edges.src == ranks.node)
+            .join(bc(outsum), "src")
+            .select(F.col("dst").alias("node"), F.expr(contrib).alias("contrib"))
+            .groupBy("node")
+            .agg(F.sum("contrib").alias("inflow"))
+        )
+        ranks = nodes.join(bc(inflow), "node", "left").select(
+            "node", update.cast("long").alias("units")
+        )
+    return ranks
+
+
 @register("graph_pagerank", oracle=_PAGERANK_ORACLE)
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank (damping 17/20, 3 rounds) over the undirected
@@ -194,57 +249,17 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence collect at all. At web-graph scale the same loop runs
     with ranks checkpointed every few rounds to truncate lineage —
     dedup_clusters' localCheckpoint discipline."""
-    t = load(spark, sf_dir)
-    e0 = _purchase_pairs(t)
-    # r14 optimization round (value-identical): edges hash-partition on
-    # dst ONCE so every round's contribution groupBy(dst) reuses the
-    # cached layout, and the node-sized frames (ranks, outsum, contrib)
-    # are broadcast into the edge-sized joins — the per-round plan is a
-    # mapPartitions over cached edges + one partition-local hash agg,
-    # ZERO per-round exchanges of edge rows (the r13 driver measured
-    # this loop at 5.5-6.9 s with two shuffle joins per round; the
-    # broadcast shape replays the identical integer arithmetic).
-    # r15: the broadcast hints are size-dispatched off table stats
-    # (_node_bcast) — ranks/outsum/contrib are node-sized, i.e. they
-    # scale with SF, and a forced hint at 100 TB is a driver OOM.
-    # r14 optimization round, second pass: outsum (node-sized) is
-    # persisted — broadcast(outsum) otherwise re-executed its groupBy
-    # over the edge cache per round (one shuffle + aggregate x
-    # PAGERANK_ITERS). Folding wsum onto the edge rows themselves (via
-    # a window or a pre-join) was tried and REJECTED: it made the COLD
-    # edge materialization ~4 s slower (an edge-sized sort / a
-    # broadcast build racing the cache) for the same warm per-round
-    # plan. Same integers either way.
-    bc = _node_bcast(spark, sf_dir)
-    edges = _both_directions(e0).repartition("dst").persist()
-    outsum = (
-        edges.groupBy("src").agg(F.sum("w").alias("wsum")).persist()
-    )
-    nodes = edges.select(F.col("src").alias("node")).distinct().persist()
-    n = nodes.count()  # scalar graph cardinality, one bounded driver fetch
-    base = 150_000_000_000 // n
-    ranks = nodes.select(
-        "node", F.lit(TOTAL_MASS // n).cast("long").alias("rank_units")
-    )
-    for _ in range(PAGERANK_ITERS):
-        contrib = (
-            edges.join(bc(ranks), edges.src == ranks.node)
-            .join(bc(outsum), "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(rank_units * w) div wsum").alias("contrib"),
-            )
-            .groupBy("node")
-            .agg(F.sum("contrib").alias("inflow"))
+    def start(nodes: DataFrame) -> tuple[Column, Column]:
+        n = nodes.count()  # scalar graph cardinality, one bounded driver fetch
+        update = F.lit(150_000_000_000 // n) + F.expr(
+            "17 * coalesce(inflow, 0L) div 20"
         )
-        ranks = nodes.join(bc(contrib), "node", "left").select(
-            "node",
-            (
-                F.lit(base)
-                + F.expr("17 * coalesce(inflow, 0L) div 20")
-            ).cast("long").alias("rank_units"),
-        )
-    return ranks
+        return F.lit(TOTAL_MASS // n), update
+
+    ranks = _weighted_inflow(
+        spark, sf_dir, PAGERANK_ITERS, "(units * w) div wsum", start
+    )
+    return ranks.select("node", F.col("units").alias("rank_units"))
 
 
 #: Backbone size for the co-occurrence graph: keep the strongest
@@ -1695,43 +1710,15 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic raw-adjacency Katz overflows fixed-point on weighted
     multigraphs; normalized-walk Katz is bounded by base * 8/7 at any
     scale)."""
-    t = load(spark, sf_dir)
-    e0 = _purchase_pairs(t)
-    # r14 optimization round (value-identical): single-pass edge build,
-    # edges hash-partitioned on dst once (every round's contribution
-    # groupBy reuses the cached layout), node-sized rank/outsum/contrib
-    # frames broadcast into the edge-scale joins — the graph_pagerank
-    # recipe applied to its Katz sibling.
-    bc = _node_bcast(spark, sf_dir)  # ranks/outsum/contrib: node-sized
-    edges = _both_directions(e0).repartition("dst").persist()
-    # r14 second pass: outsum persisted — its groupBy over the edge
-    # cache otherwise re-executes inside a broadcast build every round
-    # (the graph_pagerank fix applied to its Katz sibling).
-    outsum = (
-        edges.groupBy("src").agg(F.sum("w").alias("wsum")).persist()
+    base = F.lit(KATZ_BASE)
+    ranks = _weighted_inflow(
+        spark,
+        sf_dir,
+        KATZ_ITERS,
+        "(units * w) div (8 * wsum)",
+        lambda nodes: (base, base + F.coalesce("inflow", F.lit(0))),
     )
-    nodes = edges.select(F.col("src").alias("node")).distinct().persist()
-    ranks = nodes.select(
-        "node", F.lit(KATZ_BASE).cast("long").alias("ku")
-    )
-    for _ in range(KATZ_ITERS):
-        contrib = (
-            edges.join(bc(ranks), edges.src == ranks.node)
-            .join(bc(outsum), "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(ku * w) div (8 * wsum)").alias("contrib"),
-            )
-            .groupBy("node")
-            .agg(F.sum("contrib").alias("inflow"))
-        )
-        ranks = nodes.join(bc(contrib), "node", "left").select(
-            "node",
-            (
-                F.lit(KATZ_BASE) + F.coalesce("inflow", F.lit(0))
-            ).cast("long").alias("ku"),
-        )
-    return ranks.select("node", F.col("ku").alias("katz_units"))
+    return ranks.select("node", F.col("units").alias("katz_units"))
 
 
 # ---------------------------------------------------------------------------

@@ -75,22 +75,22 @@ def scan_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("server", F.explode("remote_paths").alias("remote_path"))
 
 
-def _binary_meta_oracle() -> str | None:
-    """Golden VALUES from the byte sizes ON DISK at import time: the scan
+def _binary_meta_oracle(sf_dir: str) -> str | None:
+    """Golden VALUES from the byte sizes ON DISK in `sf_dir`: the scan
     must report exactly what is there, and deriving (not hardcoding) the
     sizes keeps the oracle correct when the driver regenerates TESTDATA
     between rounds (r2 pinned literals; r3's regeneration broke them)."""
     from ..goldens import fixture_parquets, values_oracle
 
     return values_oracle(
-        [(os.path.basename(p), os.path.getsize(p)) for p in fixture_parquets()],
+        [(os.path.basename(p), os.path.getsize(p)) for p in fixture_parquets(sf_dir)],
         ["file_name", "length"],
         order_by="file_name",
         casts={"length": "BIGINT"},
     )
 
 
-@register("scan_binary_meta", oracle=_binary_meta_oracle())
+@register("scan_binary_meta", oracle=_binary_meta_oracle)
 def scan_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File metadata scan: path/mtime/length without reading payloads
     (reference A6-A8 pre-stat probes, child.py:35-81). `content` is dropped
@@ -486,15 +486,15 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.unionByName(inserts)
 
 
-def _metadata_cols_oracle() -> str | None:
+def _metadata_cols_oracle(sf_dir: str) -> str | None:
     """Golden VALUES from the parquet footer + stat of the file the scan
-    reads (import-time, regeneration-proof — see goldens.py)."""
-    from ..goldens import ORACLE_SF_DIR, values_oracle
+    reads (regeneration-proof — see goldens.py)."""
+    from ..goldens import values_oracle
 
     try:
         import pyarrow.parquet as pq
 
-        path = os.path.join(ORACLE_SF_DIR, "lineitem.parquet")
+        path = os.path.join(sf_dir, "lineitem.parquet")
         n_rows = pq.ParquetFile(path).metadata.num_rows
         size = os.path.getsize(path)
     except Exception:
@@ -506,7 +506,7 @@ def _metadata_cols_oracle() -> str | None:
     )
 
 
-@register("scan_metadata_columns", oracle=_metadata_cols_oracle())
+@register("scan_metadata_columns", oracle=_metadata_cols_oracle)
 def scan_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hidden `_metadata` columns on file scans: per-row provenance
     (file name/size) surfaced as ordinary columns — Spark's built-in

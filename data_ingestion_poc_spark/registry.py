@@ -4,7 +4,10 @@ Every operator from SURVEY.md section 2 Part B registers here with
 ``@register(name, oracle=...)``. ``__spark_entry__.py`` exposes the registry
 as ``queries()`` / ``oracle_sql()``. Oracle SQL is ANSI SQL runnable by
 DuckDB over the same parquet views; ``oracle=None`` marks an op as
-non-SQL-expressible (driver records a rows-only check).
+non-SQL-expressible (driver records a rows-only check). A golden-VALUES
+oracle computed from the fixture files is registered as its uncalled
+builder ``sf_dir -> str | None`` (goldens.py); it runs the first time the
+oracle is asked for at a scale, never at registration.
 
 Parity conventions (SURVEY.md section 7 risk register):
 - alias every computed column identically in Spark and SQL;
@@ -16,13 +19,17 @@ Parity conventions (SURVEY.md section 7 risk register):
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import goldens
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
+OracleBuilder = Callable[[str], str | None]
 
 # Modules whose import registers queries. Extend as operators land.
 MODULES = [
@@ -74,8 +81,26 @@ MODULES = [
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None  # ANSI SQL for DuckDB, or None for rows-only check
+    oracle_source: str | OracleBuilder | None  # SQL text or golden builder
     doc: str | None
+
+    @property
+    def oracle(self) -> str | None:
+        """ANSI SQL for DuckDB at the default oracle scale
+        (goldens.ORACLE_SF_DIR), or None for a rows-only check."""
+        return self.oracle_at(goldens.ORACLE_SF_DIR)
+
+    def oracle_at(self, sf_dir: str) -> str | None:
+        """The oracle SQL with a golden builder resolved at `sf_dir`."""
+        if callable(self.oracle_source):
+            return _resolve_golden(self.name, sf_dir)
+        return self.oracle_source
+
+
+@functools.cache
+def _resolve_golden(name: str, sf_dir: str) -> str | None:
+    """The one place a golden builder runs: once per (name, sf_dir)."""
+    return _REGISTRY[name].oracle_source(sf_dir)
 
 
 #: Every oracle=None query must have an entry here explaining why no
@@ -130,7 +155,7 @@ _REGISTRY: dict[str, Query] = {}
 _LOADED = False
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str | OracleBuilder | None = None):
     """Decorator: register fn(spark, sf_dir) -> DataFrame under `name`.
 
     Every query is wrapped so that the load-bearing runtime confs
@@ -145,8 +170,6 @@ def register(name: str, oracle: str | None = None):
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
 
-        import functools
-
         from .catalog import ensure_session_confs
 
         @functools.wraps(fn)
@@ -154,7 +177,9 @@ def register(name: str, oracle: str | None = None):
             ensure_session_confs(spark)
             return fn(spark, sf_dir)
 
-        _REGISTRY[name] = Query(name=name, fn=wrapped, oracle=oracle, doc=fn.__doc__)
+        _REGISTRY[name] = Query(
+            name=name, fn=wrapped, oracle_source=oracle, doc=fn.__doc__
+        )
         return fn
 
     return deco

@@ -1470,7 +1470,7 @@ def stream_hll_active_users_bound(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def _stream_minhash_oracle() -> str | None:
+def _stream_minhash_oracle(sf_dir: str) -> str | None:
     """Golden-VALUES oracle from the pure-Python pipeline replay
     (dedup.py _replay_band_buckets — the same bit-exact xxhash64 +
     murmur3 band keys the batch dedup_minhash oracle pins): the
@@ -1479,7 +1479,7 @@ def _stream_minhash_oracle() -> str | None:
     from ..goldens import values_oracle
     from ..llm.dedup import _replay_band_buckets
 
-    replay = _replay_band_buckets()
+    replay = _replay_band_buckets(sf_dir)
     if replay is None:
         return None
     _, buckets = replay
@@ -1503,7 +1503,7 @@ def _stream_minhash_oracle() -> str | None:
     )
 
 
-@register("stream_dedup_minhash", oracle=_stream_minhash_oracle())
+@register("stream_dedup_minhash", oracle=_stream_minhash_oracle)
 def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup detection: the banded-MinHash LSH index
     (dedup_minhash's shingle -> 32 xxhash64 minhashes -> 8 band keys,

@@ -67,7 +67,7 @@ def test_scenecut_matches_python_replay_and_fires(spark):
         for r in registry.get("multimodal_video_scenecut").fn(spark, sf).collect()
     ]
     expect = []
-    for name, blob in _read_fixture_blobs():
+    for name, blob in _read_fixture_blobs(sf):
         expect.extend(_scene_rows(name, blob))
     assert sorted(got) == sorted(expect)
     assert any(r[4] for r in got), "no scene cut fired on the fixtures"
@@ -96,7 +96,7 @@ def test_audio_vad_matches_python_replay(spark):
         for r in registry.get("multimodal_audio_vad").fn(spark, ORACLE_SF_DIR).collect()
     ]
     expect = []
-    for name, blob in _read_fixture_blobs():
+    for name, blob in _read_fixture_blobs(ORACLE_SF_DIR):
         expect.extend(_vad_rows(name, _fake_samples(blob)))
     assert sorted(got) == sorted(expect)
     assert got, "threshold produced no segments on the fixtures"

@@ -5,11 +5,21 @@ covered by their own oracle checks, so they are skipped here."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import json
+import os
 import re
+import subprocess
+import sys
 
 import pytest
 
 from data_ingestion_poc_spark import registry
+
+from conftest import SF_CORRECT
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SKIP_PREFIXES = ("stream_",)  # constructing these executes a streaming query
 SKIP_EXPENSIVE = {"ingest_observe"}  # runs an action internally
@@ -86,7 +96,7 @@ def test_rows_only_queries_have_rationale():
     since gained an oracle) — the checklist that keeps rows-only checks an
     explicit, justified exception rather than silent verification debt.
 
-    Golden-VALUES oracles are computed from the fixture dir at import and
+    Golden-VALUES oracles are computed from the fixture dir on demand and
     degrade to None when it is absent; on a machine without the fixtures
     the exact-set assertion is meaningless, so only assert the documented
     names are a subset and skip the staleness half."""
@@ -122,3 +132,86 @@ def test_cli_list_and_unknown_query(capsys):
         assert name in out
     assert out.count("\n") == len(registry.all_queries())
     assert main(["run", "no_such_query"]) == 2
+
+
+def test_registering_computes_no_golden(tmp_path):
+    """Importing every module computes no golden oracle: with the default
+    oracle scale pointed at a directory that does not exist yet, the
+    goldens resolve from the fixtures copied there AFTER import_all()."""
+    names = ["dedup_minhash", "multimodal_audio_framestats", "scan_binary_meta"]
+    target = tmp_path / "sf"
+    script = (
+        "import json, shutil, sys\n"
+        "from data_ingestion_poc_spark import registry\n"
+        "registry.import_all()\n"
+        f"shutil.copytree({SF_CORRECT!r}, {str(target)!r})\n"
+        f"print(json.dumps({{n: registry.get(n).oracle for n in {names!r}}}))\n"
+    )
+    env = dict(os.environ, SPARK_GRAFT_ORACLE_SF_DIR=str(target))
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=REPO, env=env,
+        capture_output=True, text=True, check=True,
+    ).stdout
+    got = json.loads(out.splitlines()[-1])
+    for name in names:
+        want = registry.get(name).oracle_at(SF_CORRECT)
+        assert want is not None, name
+        assert got[name] == want, name
+
+
+def _import_time_golden_sites(root: str) -> list[str]:
+    """'path:line: what' for every package call to a function that takes
+    `sf_dir` made at import time (module body, decorators, defaults), and
+    every use of ORACLE_SF_DIR outside goldens.py and registry.py."""
+    paths = glob.glob(
+        os.path.join(root, "data_ingestion_poc_spark", "**", "*.py"),
+        recursive=True,
+    )
+    trees = {}
+    for path in paths:
+        with open(path) as f:
+            trees[os.path.relpath(path, root)] = ast.parse(f.read())
+    takes_sf = {
+        node.name
+        for tree in trees.values()
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and "sf_dir" in [a.arg for a in node.args.args + node.args.kwonlyargs]
+    }
+
+    def import_time(node):
+        """`node` and its descendants that run when the module is
+        imported: decorators and defaults, never function bodies."""
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            args = node.args
+            for expr in node.decorator_list + args.defaults + args.kw_defaults:
+                if expr is not None:
+                    yield from import_time(expr)
+            return
+        if isinstance(node, ast.Lambda):
+            return
+        yield node
+        for child in ast.iter_child_nodes(node):
+            yield from import_time(child)
+
+    found = []
+    for rel, tree in trees.items():
+        for node in import_time(tree):
+            func = getattr(node, "func", None)
+            name = getattr(func, "id", getattr(func, "attr", None))
+            if isinstance(node, ast.Call) and name in takes_sf:
+                found.append(f"{rel}:{node.lineno}: {name}() at import")
+        if rel.endswith(("/goldens.py", "/registry.py")):
+            continue
+        for node in ast.walk(tree):
+            if "ORACLE_SF_DIR" in {getattr(node, k, None) for k in ("id", "attr", "name")}:
+                found.append(f"{rel}:{getattr(node, 'lineno', '?')}: ORACLE_SF_DIR")
+    return found
+
+
+def test_golden_builders_are_registered_uncalled():
+    """Regrowth guard: a golden builder takes `sf_dir` and is registered
+    uncalled (`oracle=_builder`), so the registry alone decides which
+    fixture it reads and when; only goldens.py and registry.py name the
+    default scale ORACLE_SF_DIR."""
+    assert _import_time_golden_sites(REPO) == []

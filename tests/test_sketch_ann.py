@@ -442,7 +442,7 @@ def test_image_dedup_pairs_every_reencode(spark):
     # every fixture file must pair with its planted re-encode variant
     from data_ingestion_poc_spark.goldens import fixture_parquets
 
-    for p in fixture_parquets():
+    for p in fixture_parquets(SF_MID):
         name = p.rsplit("/", 1)[-1]
         assert (name, name + "#v") in pairs, name
     for r in rows:

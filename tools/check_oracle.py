@@ -19,6 +19,10 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_ingestion_poc_spark import registry
+from data_ingestion_poc_spark.catalog import TABLES
+from data_ingestion_poc_spark.session import get_spark
+
 #: DuckDB's memory cap: a quarter of physical memory.
 _DUCK_MEMORY_MB = (
     os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4 // 2**20
@@ -105,26 +109,6 @@ def main() -> int:
                     "runtime-settable confs take effect")
     args = ap.parse_args()
 
-    # Import-time goldens (goldens.py / pyhash.py) are computed against
-    # ORACLE_SF_DIR; align it with --sf BEFORE the registry import so a
-    # non-default scale never silently compares against sf0.01 fixtures.
-    if "SPARK_GRAFT_ORACLE_SF_DIR" not in os.environ:
-        os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = args.sf
-    elif os.path.abspath(os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]) != os.path.abspath(
-        args.sf
-    ):
-        print(
-            f"WARNING: --sf {args.sf} != SPARK_GRAFT_ORACLE_SF_DIR="
-            f"{os.environ['SPARK_GRAFT_ORACLE_SF_DIR']}; golden-VALUES oracles "
-            "will be computed from the latter",
-            file=sys.stderr,
-        )
-
-    global registry, TABLES, get_spark
-    from data_ingestion_poc_spark import registry
-    from data_ingestion_poc_spark.catalog import TABLES
-    from data_ingestion_poc_spark.session import get_spark
-
     if args.vanilla:
         from pyspark.sql import SparkSession
 
@@ -164,11 +148,12 @@ def main() -> int:
         t0 = time.time()
         try:
             sp = q.fn(spark, args.sf).toPandas()
-            if q.oracle is None:
+            oracle = q.oracle_at(args.sf)
+            if oracle is None:
                 n_rowsonly += 1
                 print(f"  ROWS-ONLY {name}: {len(sp)} rows [{time.time()-t0:.1f}s]")
                 continue
-            du = con.execute(q.oracle).df()
+            du = con.execute(oracle).df()
             hard_diff, soft_diff = dtype_mismatches(sp, du)
             if hard_diff:
                 raise AssertionError(f"dtype mismatch: {'; '.join(hard_diff)}")

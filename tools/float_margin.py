@@ -29,6 +29,11 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_ingestion_poc_spark import registry
+from data_ingestion_poc_spark.catalog import TABLES
+from data_ingestion_poc_spark.session import get_spark
+
+
 def max_float_diff(
     sp: pd.DataFrame, du: pd.DataFrame
 ) -> tuple[float, int] | str:
@@ -101,11 +106,6 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", args.sf)
-    from data_ingestion_poc_spark import registry
-    from data_ingestion_poc_spark.catalog import TABLES
-    from data_ingestion_poc_spark.session import get_spark
-
     spark = get_spark(shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
@@ -113,15 +113,16 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
         )
     qs = registry.all_queries()
-    names = args.names or sorted(n for n, q in qs.items() if q.oracle is not None)
+    names = args.names or sorted(qs)
     rows = []
     for name in names:
         q = qs[name]
-        if q.oracle is None:
+        oracle = q.oracle_at(args.sf)
+        if oracle is None:
             continue
         try:
             sp = q.fn(spark, args.sf).toPandas()
-            du = con.execute(q.oracle).df()
+            du = con.execute(oracle).df()
             res = max_float_diff(sp, du)
         except Exception as e:  # report, keep sweeping
             print(f"  ERROR     {name}: {e}")
