@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load
 from ..registry import register
+from ..session import scoped_conf
 
 #: salt fan-out for the skew-join demo. At 100 TB you would size this to
 #: (hot-key rows / target partition rows), per AQE skew stats.
@@ -633,10 +634,7 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in gates}
-    for k, v in gates.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, gates):
         t = load(spark, sf_dir)
         urgent = t.orders.where(F.col("o_orderpriority") == "1-URGENT").select(
             "o_orderkey"
@@ -650,10 +648,4 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # force plan resolution under the lowered gates before restoring
         out._jdf.queryExecution().executedPlan()
-    finally:
-        for k, was in prev.items():
-            if was is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, was)
     return out

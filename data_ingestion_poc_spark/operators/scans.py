@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
+from ..session import scoped_conf
 
 def _sink_dir(name: str, sf_dir: str) -> str:
     """Per-(operator, source) scratch sink path: keyed by a digest of the
@@ -1071,11 +1072,7 @@ def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression to a data-reading scan fails the value hash."""
     v1_key = "spark.sql.sources.useV1SourceList"
     push_key = "spark.sql.parquet.aggregatePushdown"
-    prev_v1 = spark.conf.get(v1_key, None)
-    prev_push = spark.conf.get(push_key, None)
-    spark.conf.set(v1_key, "")
-    spark.conf.set(push_key, "true")
-    try:
+    with scoped_conf(spark, {v1_key: "", push_key: "true"}):
         li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
         agg = li.agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -1085,15 +1082,6 @@ def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         plan = agg._jdf.queryExecution().executedPlan().toString()
         row = agg.collect()[0]
-    finally:
-        if prev_v1 is None:
-            spark.conf.unset(v1_key)
-        else:
-            spark.conf.set(v1_key, prev_v1)
-        if prev_push is None:
-            spark.conf.unset(push_key)
-        else:
-            spark.conf.set(push_key, prev_push)
     return spark.createDataFrame(
         [
             (
@@ -1397,15 +1385,11 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     correction = base.where(F.col("month") == 3).select(
         "month", "o_orderkey", (F.col("o_totalprice") * 0.9).alias("o_totalprice")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         # dynamic mode: ONLY month=3's directory is replaced
         correction.select("o_orderkey", "o_totalprice", "month").write.mode(
             "overwrite"
         ).partitionBy("month").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(out)
     return back.groupBy("month").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),

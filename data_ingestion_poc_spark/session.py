@@ -7,13 +7,20 @@ Design notes for 100 TB (SURVEY.md section 4.2):
   multimodal decode) moves columnar batches, not pickled rows.
 - UTC session timezone: parquet timestamps are naive; pinning UTC keeps
   Spark and the DuckDB oracle byte-identical on datetime output.
-- shuffle.partitions is a knob (env DIP_SHUFFLE_PARTITIONS); on a real
-  cluster you would size it so post-shuffle partitions are ~100-200 MB.
+- shuffle.partitions is a batch knob (env DIP_SHUFFLE_PARTITIONS); on a
+  real cluster you would size it so post-shuffle partitions are
+  ~100-200 MB, and AQE coalesces what the data does not fill. Streams
+  are the exception: AQE is off inside micro-batches, so a stateful
+  stage keeps one state store per partition, and streaming.core.run_stream
+  creates each new checkpoint with min(shuffle partitions,
+  defaultParallelism) of them.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -77,6 +84,24 @@ def builder(
             "data_ingestion_poc_spark.daemon_preload",
         )
     )
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
+    """Set runtime SQL confs for the body of a ``with`` block, then put
+    each key back as it was (unset again if it was unset), on success
+    and on error alike."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, was in prev.items():
+            if was is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, was)
 
 
 def enable_rocksdb_state_store(b: SparkSession.Builder) -> SparkSession.Builder:

@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import register
-from .core import events_stream, finish_stream, run_available_now
+from ..session import scoped_conf
+from .core import events_stream, run_available_now, run_stream
 
 
 @register(
@@ -372,13 +373,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     sdf = events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", sink + "_ckpt")
-        .start()
-    )
-    finish_stream(q)
+    run_stream(sdf, sink=write_batch, checkpoint=sink + "_ckpt")
     shutil.rmtree(sink + "_ckpt", ignore_errors=True)
     back = spark.read.parquet(sink)
     return back.groupBy("event_type").agg(
@@ -423,15 +418,7 @@ def stream_file_ingest_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = sdf.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     name = "mem_clean_" + uuid.uuid4().hex[:8]
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(run, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_stream(q)
+    run_stream(counts, "complete", name=name, checkpoint=os.path.join(run, "ckpt"))
     return spark.table(name)
 
 
@@ -510,13 +497,7 @@ def stream_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    q = (
-        sdf.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(run, "ckpt"))
-        .start()
-    )
-    finish_stream(q)
+    run_stream(sdf, sink=upsert, checkpoint=os.path.join(run, "ckpt"))
     final = spark.read.parquet(state["dir"]).select(
         "bhour",
         "event_type",
@@ -674,15 +655,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n",
             )
         )
-        _q = (
-            sdf.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finish_stream(_q)
+        run_stream(sdf, sink="parquet", path=sink, checkpoint=ckpt)
 
     # run 1: early drops only -> tail windows held back in state
     for src, dst in staged[:2]:
@@ -710,6 +683,15 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Provider conf of the two RocksDB-state stream queries.
+_ROCKSDB_PROVIDER = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    ),
+}
+
+
 @register(
     "stream_stateful_rocksdb",
     oracle="""
@@ -731,14 +713,7 @@ def stream_stateful_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same oracle as stream_stateful: the provider swap must be invisible
     to results. The conf is restored afterward so sibling stream queries
     keep the default provider."""
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, _ROCKSDB_PROVIDER):
         sdf = events_stream(spark, sf_dir)
         counters = sdf.groupBy("user_id").applyInPandasWithState(
             _user_counters,
@@ -748,11 +723,6 @@ def stream_stateful_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
         final = run_available_now(counters, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     return final.select(
         "user_id",
         "n_events",
@@ -893,14 +863,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     proc = type(
         "ProfileProcessor", (_ProfileProcessor, StatefulProcessor), {}
     )()
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, _ROCKSDB_PROVIDER):
         sdf = events_stream(spark, sf_dir)
         profiles = sdf.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=proc,
@@ -912,11 +875,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
         final = run_available_now(profiles, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     return final.select(
         "user_id",
         "n_events",
@@ -1271,15 +1229,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("kept_tokens"),
     )
     name = "mem_qgate_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(run, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish_stream(q)
+    run_stream(agg, "complete", name=name, checkpoint=os.path.join(run, "ckpt"))
     shutil.rmtree(run, ignore_errors=True)
     return spark.table(name)
 
@@ -1605,7 +1555,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid as _uuid
 
-    from .core import docs_stream, finish_stream
+    from .core import docs_stream
 
     src = os.path.join(sf_dir, "documents.parquet")
     ident = hashlib.md5(
@@ -1619,15 +1569,9 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").alias("total_chars"),
         F.count(F.lit(1)).alias("n_docs"),
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("mem_state_rdr_" + _uuid.uuid4().hex[:8])
-        .outputMode("complete")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        agg, "complete", name="mem_state_rdr_" + _uuid.uuid4().hex[:8], checkpoint=ck
     )
-    finish_stream(q)
     st = spark.read.format("statestore").load(ck)
     return st.select(
         F.col("key.lang").alias("lang"),

@@ -5,10 +5,20 @@ tools/check_oracle.py."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import inspect
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
-from data_ingestion_poc_spark import registry
+from data_ingestion_poc_spark import registry, session
 from data_ingestion_poc_spark.catalog import load
+from data_ingestion_poc_spark.streaming import core
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def test_watermark_drops_late_rows(spark, sf_dir):
@@ -180,3 +190,91 @@ def test_dynamic_gap_purchase_bridges_session(spark, tmp_path):
     )
     out2 = registry.get("stream_session_dynamic_gap").fn(spark, str(d2)).collect()
     assert len(out2) == 2
+
+
+def test_stream_state_partitions_follow_the_cores(spark, sf_dir):
+    """A new checkpoint's stateful operators run on
+    min(shuffle partitions, defaultParallelism) state stores, read from
+    the progress finish_stream keeps, and the session's batch knob reads
+    its own value again once the streams are done. (The shared session
+    reads 8, or 4 after a module fixture re-asked for it with 4.)"""
+    before = spark.conf.get(SHUFFLE_PARTITIONS)
+    start = len(core.STREAM_PROGRESS)
+    for name in ("stream_tumbling_agg", "stream_dedup"):
+        registry.get(name).fn(spark, sf_dir).collect()
+    recorded = core.STREAM_PROGRESS[start:]
+    assert len(recorded) == 2
+    parts = {
+        op["numShufflePartitions"]
+        for _name, progress in recorded
+        for batch in progress
+        for op in batch["stateOperators"]
+    }
+    assert parts == {min(int(before), spark.sparkContext.defaultParallelism)}
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == before
+
+
+def test_stream_start_error_restores_conf(spark, sf_dir):
+    """A start that raises (complete mode without an aggregation is
+    rejected by .start()) leaves the session's shuffle partitions as
+    they were."""
+    before = spark.conf.get(SHUFFLE_PARTITIONS)
+    sdf = core.events_stream(spark, sf_dir).select("event_id")
+    with pytest.raises(Exception, match="(?i)complete"):
+        core.run_available_now(sdf, "complete")
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == before
+
+
+def test_scoped_conf_unsets_what_was_unset(spark):
+    key = "spark.dip.test.scopedConf"
+    before = spark.conf.get(SHUFFLE_PARTITIONS)
+    with pytest.raises(RuntimeError):
+        with session.scoped_conf(spark, {key: "1", SHUFFLE_PARTITIONS: "3"}):
+            assert spark.conf.get(key) == "1"
+            assert spark.conf.get(SHUFFLE_PARTITIONS) == "3"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(key, None) is None
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == before
+
+
+def _attribute_sites(root: str, attr: str, owner: str | None) -> list[tuple[str, int]]:
+    """(path, line) of every `<x>.<attr>` in the package under `root`,
+    where `<x>` ends in `.<owner>` when `owner` is given."""
+    found = []
+    for path in glob.glob(
+        os.path.join(root, "data_ingestion_poc_spark", "**", "*.py"),
+        recursive=True,
+    ):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == attr
+                and (owner is None or getattr(node.value, "attr", None) == owner)
+            ):
+                found.append((os.path.relpath(path, root), node.lineno))
+    return found
+
+
+@pytest.mark.parametrize(
+    "attr, owner, module, helper_name",
+    [
+        ("writeStream", None, core, "run_stream"),
+        ("unset", "conf", session, "scoped_conf"),
+    ],
+    ids=["writeStream", "conf.unset"],
+)
+def test_one_stream_start_and_one_conf_restore(attr, owner, module, helper_name):
+    """Regrowth guard: streams start only in streaming.core.run_stream
+    (which sizes their state partitions) and runtime confs are unset
+    only in session.scoped_conf. Start or scope through those instead
+    of writing a copy."""
+    helper = getattr(module, helper_name)
+    lines, first = inspect.getsourcelines(inspect.unwrap(helper))
+    home = os.path.relpath(inspect.getsourcefile(inspect.unwrap(helper)), REPO)
+    span = range(first, first + len(lines))
+    sites = _attribute_sites(REPO, attr, owner)
+    stray = [f"{p}:{n}" for p, n in sites if p != home or n not in span]
+    assert stray == [], f"`.{attr}` outside {helper_name}: {stray}"
+    assert sites
