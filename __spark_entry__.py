@@ -49,34 +49,31 @@ _CHANGED_THIS_ROUND: list[str] = [
 # never-judged names so the correctness driver's window re-hashes them
 # before any stale verdict; the list names the latest such change only.
 _CHANGED_JUDGED_THIS_ROUND: list[str] = [
-    # every stream starts through streaming.core.run_stream (state
-    # partitions sized to the cores)
-    "stream_tumbling_agg",
-    "stream_sliding_agg",
-    "stream_session_window",
-    "stream_dedup",
-    "stream_stateful",
-    "stream_watermark_late",
-    "stream_stream_join",
-    "stream_foreach_batch_sink",
-    "stream_file_ingest_clean",
-    "stream_rollup_upsert",
-    "stream_append_mode",
-    "stream_checkpoint_resume",
-    "stream_stateful_rocksdb",
-    "stream_static_join",
-    "stream_outer_join_watermark",
-    "stream_session_dynamic_gap",
-    "stream_quality_gate",
-    "stream_hourly_active_users",
-    "stream_topk_per_window",
-    "stream_hll_active_users_bound",
-    "stream_dedup_minhash",
+    # rounds run through catalog.iterate (one per-round barrier)
+    "graph_pagerank",
+    "graph_katz_centrality",
+    "graph_label_propagation",
+    "graph_bfs_distance",
+    "graph_kcore",
+    "graph_closeness_centrality",
+    "agg_markov_stationary",
+    "dedup_clusters",
+    "dedup_cluster_histogram",
+    "corpus_dedup_keep",
+    "corpus_dedup_manifest",
+    "corpus_curate_e2e",
+    "sample_split_leakage_safe",
+    # one backbone build (graph._backbone: edges, adjacency, degrees)
+    "graph_triangle_count",
+    "graph_clustering_coefficient",
+    "graph_modularity",
+    "graph_adamic_adar",
+    "graph_rich_club",
+    "graph_avg_neighbor_degree",
+    "graph_resource_allocation",
+    "graph_preferential_attachment",
+    # checkpoint keyed by the session's applicationId
     "stream_state_reader",
-    # conf set/restore through session.scoped_conf
-    "join_bloom_pruned",
-    "scan_agg_pushdown",
-    "sink_dynamic_partition_overwrite",
 ]
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 from pyspark.storagelevel import StorageLevel
 
-from ..catalog import _session_entry, fanout_repartition, load
+from ..catalog import _session_entry, fanout_repartition, iterate, load
 from ..registry import register
 
 
@@ -713,13 +713,15 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph has chain-shaped components thousands deep; the shortcut
     collapses label chains geometrically, so convergence is O(log
     diameter) (a planted 20-deep chain converges in 5 rounds vs 11 —
-    tools/scale_probe.py --cc-chain). Convergence detection is an inline
+    tools/scale_probe.py --cc-chain). The rounds run through
+    catalog.iterate (its barrier rule): each round reads the previous
+    labels three times (hop, candidate, jump). Convergence is an inline
     `chg` flag computed in the SAME projection as the new label and
-    summed off the just-checkpointed frame — no extra join against the
-    previous labels. ``localCheckpoint`` truncates the growing lineage
-    each round — on a real cluster use a reliable checkpoint dir
-    instead. A recursive transitive closure like the DuckDB oracle's
-    would be O(component^2) rows and is only viable at oracle scale.
+    summed off the checkpointed round — no extra join against the
+    previous labels. On a real cluster the barrier wants a reliable
+    checkpoint dir instead. A recursive transitive closure like the
+    DuckDB oracle's would be O(component^2) rows and is only viable at
+    oracle scale.
 
     Generalizes the reference's dedup decision (child.py:174-191: per-file
     keep/rename) from per-pair to per-cluster. Oracle: recursive-CTE
@@ -734,9 +736,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and per-iteration fixed costs (empty tasks x rounds) otherwise
     # dominate the loop. The count comes off the PAIR frame — already
     # checkpointed by jaccard_pairs_checkpointed — so the edge union is
-    # materialized exactly once (r7 profile: the old
-    # checkpoint-count-repartition-checkpoint shape wrote the edge set
-    # twice for no information gain; tools/profile_cc.py).
+    # materialized exactly once (an r7 profile measured the old
+    # checkpoint-count-repartition-checkpoint shape writing the edge set
+    # twice for no information gain; BASELINE.md, dedup_clusters).
     n_parts = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")),
                          (2 * pairs.count()) // 100_000 + 1))
     edges = edges.repartition(n_parts, "dst").localCheckpoint()
@@ -747,10 +749,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
 
-    global LAST_CC_ROUNDS
-    LAST_CC_ROUNDS = 0
-    for rnd in range(_CC_MAX_ITERS):
-        LAST_CC_ROUNDS += 1
+    def step(state: DataFrame, rnd: int) -> DataFrame:
+        labels = state.select("doc_id", "lbl")
         # hop: min over neighbors' labels (one shuffle keyed on dst —
         # edges are pre-partitioned on it — plus the groupBy(src) agg)
         nbr_min = (
@@ -771,41 +771,37 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         if rnd == 0:
             # round 1: every label is still its own doc_id, so the jump
             # lookup is the identity — skip the join entirely
-            new_labels = cand.select(
+            return cand.select(
                 "doc_id",
                 F.col("cand").alias("lbl"),
                 (F.col("cand") != F.col("old_lbl")).cast("long").alias("chg"),
-            ).localCheckpoint()
-        else:
-            # jump: shortcut through the previous mapping (label-of-label).
-            # Labels only ever decrease, so old_map[cand] <= cand is always
-            # a valid (often much better) label — this is what turns
-            # O(diameter) rounds into O(log diameter). Every label VALUE is
-            # a doc_id key by induction; left join + coalesce is
-            # belt-and-braces.
-            new_labels = (
-                cand.join(
-                    labels.select(
-                        F.col("doc_id").alias("p"), F.col("lbl").alias("p_lbl")
-                    ),
-                    F.col("cand") == F.col("p"),
-                    "left",
-                )
-                .select(
-                    "doc_id",
-                    F.least("cand", F.coalesce("p_lbl", "cand")).alias("lbl"),
-                    (F.least("cand", F.coalesce("p_lbl", "cand")) != F.col("old_lbl"))
-                    .cast("long")
-                    .alias("chg"),
-                )
-                .localCheckpoint()
             )
-        # convergence flag was computed inline above; summing it off the
-        # just-materialized checkpoint is a map-only job, not a join
-        changed = new_labels.agg(F.sum("chg")).collect()[0][0]
-        labels = new_labels.select("doc_id", "lbl")
-        if not changed:
-            break
+        # jump: shortcut through the previous mapping (label-of-label).
+        # Labels only ever decrease, so old_map[cand] <= cand is always
+        # a valid (often much better) label — this is what turns
+        # O(diameter) rounds into O(log diameter). Every label VALUE is
+        # a doc_id key by induction; left join + coalesce is
+        # belt-and-braces.
+        return cand.join(
+            labels.select(F.col("doc_id").alias("p"), F.col("lbl").alias("p_lbl")),
+            F.col("cand") == F.col("p"),
+            "left",
+        ).select(
+            "doc_id",
+            F.least("cand", F.coalesce("p_lbl", "cand")).alias("lbl"),
+            (F.least("cand", F.coalesce("p_lbl", "cand")) != F.col("old_lbl"))
+            .cast("long")
+            .alias("chg"),
+        )
+
+    global LAST_CC_ROUNDS
+    state, LAST_CC_ROUNDS = iterate(
+        labels,
+        step,
+        _CC_MAX_ITERS,
+        until=lambda s: not s.agg(F.sum("chg")).collect()[0][0],
+    )
+    labels = state.select("doc_id", "lbl")
     sizes = labels.groupBy(F.col("lbl").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("cluster_size")
     )

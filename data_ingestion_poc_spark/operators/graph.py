@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import footer_row_count, load
+from ..catalog import footer_row_count, iterate, load
 from ..registry import register
 
 #: Total rank mass in integer micro-units, and the damping factor 0.85
@@ -171,13 +171,11 @@ _PAGERANK_ORACLE = (
     + _EDGES_SQL
     + ",\n    r0 AS (SELECT node, CAST(" + str(TOTAL_MASS) + " // (SELECT n FROM nn)"
     " AS BIGINT) AS rank_units FROM nodes),"
-    + _rank_step_sql("r0", "r1")
-    + ","
-    + _rank_step_sql("r1", "r2")
-    + ","
-    + _rank_step_sql("r2", "r3")
-    + """
-    SELECT node, rank_units FROM r3
+    + ",".join(
+        _rank_step_sql(f"r{k}", f"r{k + 1}") for k in range(PAGERANK_ITERS)
+    )
+    + f"""
+    SELECT node, rank_units FROM r{PAGERANK_ITERS}
     """
 )
 
@@ -336,32 +334,16 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
        two shuffle joins on edge keys, no cartesian anywhere;
     5. per-node credit = explode each triangle's three corners, count.
     """
-    t = load(spark, sf_dir)
-    # r14 optimization round: the backbone builds ONCE through the
-    # shared _backbone_edges helper and the 500-row edge list is
-    # localCheckpoint-materialized — the orientation/wedge stages below
-    # reference `edges` (directly and via oriented o1/o2/o3) many
-    # times, and each lazy reference re-executed the whole
-    # bipartite-distinct + self-join + TakeOrdered backbone (the r13
-    # --all record read 7.7 s; the checkpointed plan counts identical
-    # triangles).
-    edges = _backbone_edges(t).localCheckpoint()
-    return _triangle_counts(edges)
+    edges, _, deg = _backbone(load(spark, sf_dir))
+    return _triangle_counts(edges, deg)
 
 
-def _triangle_counts(edges: DataFrame) -> DataFrame:
-    """Stages 3-5 of graph_triangle_count over a (u, v) backbone frame
-    (pass a MATERIALIZED frame — the orientation and wedge stages
-    reference it repeatedly). Shared with
+def _triangle_counts(edges: DataFrame, deg: DataFrame) -> DataFrame:
+    """Stages 3-5 of graph_triangle_count over _backbone's (u, v) edge
+    frame and its degree frame. Shared with
     graph_clustering_coefficient (r14), which previously re-executed
     the whole backbone once for the triangle side and once for its
     degree frame."""
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     lesser = (F.col("du") < F.col("dv")) | (
@@ -518,15 +500,13 @@ _LABELPROP_ORACLE = (
     "WITH "
     + _EDGES_SQL
     + ",\n    l0 AS (SELECT node, node AS label FROM nodes),"
-    + _lp_step_sql("l0", "l1")
-    + ","
-    + _lp_step_sql("l1", "l2")
-    + ","
-    + _lp_step_sql("l2", "l3")
-    + """
+    + ",".join(
+        _lp_step_sql(f"l{k}", f"l{k + 1}") for k in range(LABELPROP_ITERS)
+    )
+    + f"""
     SELECT node, label AS community,
            COUNT(*) OVER (PARTITION BY label) AS community_size
-    FROM l3
+    FROM l{LABELPROP_ITERS}
     """
 )
 
@@ -626,7 +606,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_pick = Window.partitionBy("node").orderBy(
         F.col("wsum").desc(), F.col("label")
     )
-    for _ in range(LABELPROP_ITERS):
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         cand = (
             edges.join(bc(labels), edges.src == labels.node)
             .select(F.col("dst").alias("node"), "label", "w")
@@ -638,12 +619,13 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node", "label")
             .agg(F.sum("w").alias("wsum"))
         )
-        labels = (
+        return (
             cand.withColumn("rn", F.row_number().over(w_pick))
             .where(F.col("rn") == 1)
             .select("node", "label")
-            .localCheckpoint()
         )
+
+    labels, _ = iterate(labels, step, LABELPROP_ITERS)
     return labels.select(
         _lp_decode("node").alias("node"),
         _lp_decode("label").alias("community"),
@@ -687,14 +669,12 @@ _BFS_ORACLE = (
       SELECT node, 0 AS dist FROM nodes
       WHERE node IN ('{BFS_SEEDS[0]}', '{BFS_SEEDS[1]}', '{BFS_SEEDS[2]}')
     ),"""
-    + _bfs_step_sql("d0", "d1")
-    + ","
-    + _bfs_step_sql("d1", "d2")
-    + ","
-    + _bfs_step_sql("d2", "d3")
-    + """
+    + ",".join(
+        _bfs_step_sql(f"d{k}", f"d{k + 1}") for k in range(BFS_ROUNDS)
+    )
+    + f"""
     SELECT node, CAST(dist AS BIGINT) AS dist
-    FROM d3 WHERE dist < 999
+    FROM d{BFS_ROUNDS} WHERE dist < 999
     """
 )
 
@@ -731,13 +711,14 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = nodes.where(F.col("node").isin(*BFS_SEEDS)).select(
         "node", F.lit(0).alias("dist")
     ).localCheckpoint()
-    for _ in range(BFS_ROUNDS):
+
+    def step(dist: DataFrame, _: int) -> DataFrame:
         relax = (
             edges.join(bc(dist), edges.src == dist.node)
             .groupBy(F.col("dst").alias("rnode"))
             .agg(F.min(F.col("dist") + 1).alias("nd"))
         )
-        dist = (
+        return (
             nodes.join(bc(dist), "node", "left")
             .join(bc(relax), F.col("node") == F.col("rnode"), "left")
             .select(
@@ -747,8 +728,9 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce("nd", F.lit(999)),
                 ).alias("dist"),
             )
-            .localCheckpoint()
         )
+
+    dist, _ = iterate(dist, step, BFS_ROUNDS)
     return dist.where(F.col("dist") < 999).select(
         "node", F.col("dist").cast("bigint").alias("dist")
     )
@@ -797,13 +779,14 @@ _HITS_ORACLE = (
       SELECT DISTINCT src AS node, CAST({HITS_SCALE} AS BIGINT) AS units
       FROM edges0
     ),"""
-    + _hits_round_sql("h0", "a1", "h1")
-    + ","
-    + _hits_round_sql("h1", "a2", "h2")
-    + """
-    SELECT node, 'hub' AS role, CAST(units AS BIGINT) AS score_units FROM h2
+    + ",".join(
+        _hits_round_sql(f"h{k}", f"a{k + 1}", f"h{k + 1}")
+        for k in range(HITS_ROUNDS)
+    )
+    + f"""
+    SELECT node, 'hub' AS role, CAST(units AS BIGINT) AS score_units FROM h{HITS_ROUNDS}
     UNION ALL
-    SELECT node, 'authority', CAST(units AS BIGINT) FROM a2
+    SELECT node, 'authority', CAST(units AS BIGINT) FROM a{HITS_ROUNDS}
     """
 )
 
@@ -928,16 +911,15 @@ _KCORE_ORACLE = (
     "WITH "
     + _EDGES_SQL
     + ","
-    + _kcore_step_sql("nodes", "k1").replace("a1.node = e.src", "a1.node = e.src")
-    + ","
-    + _kcore_step_sql("k1", "k2")
-    + ","
-    + _kcore_step_sql("k2", "k3")
+    + ",".join(
+        _kcore_step_sql(f"k{k}" if k else "nodes", f"k{k + 1}")
+        for k in range(KCORE_ROUNDS)
+    )
     + f"""
     SELECT e.src AS node, CAST(COUNT(*) AS BIGINT) AS core_degree
     FROM edges e
-    JOIN k3 a1 ON a1.node = e.src
-    JOIN k3 a2 ON a2.node = e.dst
+    JOIN k{KCORE_ROUNDS} a1 ON a1.node = e.src
+    JOIN k{KCORE_ROUNDS} a2 ON a2.node = e.dst
     GROUP BY e.src
     HAVING COUNT(*) >= {KCORE_K}
     """
@@ -979,22 +961,27 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     alive = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    for _ in range(KCORE_ROUNDS):
-        deg = (
+
+    def degrees(alive: DataFrame) -> DataFrame:
+        return (
             edges.join(bc(alive.withColumnRenamed("node", "src")), "src", "semi")
             .join(bc(alive.withColumnRenamed("node", "dst")), "dst", "semi")
             .groupBy(F.col("src").alias("node"))
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        alive = deg.where(F.col("deg") >= KCORE_K).select("node").localCheckpoint()
-    out = (
-        edges.join(bc(alive.withColumnRenamed("node", "src")), "src", "semi")
-        .join(bc(alive.withColumnRenamed("node", "dst")), "dst", "semi")
-        .groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
+
+    alive, _ = iterate(
+        alive,
+        lambda alive, _: degrees(alive)
+        .where(F.col("deg") >= KCORE_K)
+        .select("node"),
+        KCORE_ROUNDS,
+    )
+    return (
+        degrees(alive)
+        .select("node", F.col("deg").cast("bigint").alias("core_degree"))
         .where(F.col("core_degree") >= KCORE_K)
     )
-    return out
 
 
 _ASSORT_ORACLE = (
@@ -1156,20 +1143,13 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     two wedge equi-joins, graph.py:199 doctrine) plus one degree left
     join on the BACKBONE-bounded node frame; cc floor-quantizes an
     identical-ints division."""
-    t = load(spark, sf_dir)
     # r14 optimization round: ONE checkpointed backbone feeds both the
     # triangle counts and the degree frame (the op previously built the
     # backbone twice — once inside graph_triangle_count, once inline
     # for degrees; r13 --all read 8.6 s, ~two backbone builds).
-    edges = _backbone_edges(t).localCheckpoint()
-    tri = _triangle_counts(edges).select(
+    edges, _, deg = _backbone(load(spark, sf_dir))
+    tri = _triangle_counts(edges, deg).select(
         "node", F.col("n_triangles").alias("n_tri")
-    )
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
     )
     n_tri = F.coalesce(F.col("n_tri"), F.lit(0))
     cc = F.when(
@@ -1308,7 +1288,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same df-cap semantics but re-executed the whole build for
     # each of `tagged`'s three consumers below — m, within, degs;
     # r13 --all read 6.3 s).
-    edges = _backbone_edges(t).localCheckpoint()
+    edges = _backbone(t)[0]
     comm = t.supplier.select(
         F.col("s_suppkey").alias("node"), F.col("s_nationkey").alias("c")
     )
@@ -1370,15 +1350,19 @@ _BACKBONE_CTE = f"""
 """
 
 
-def _backbone_edges(t) -> DataFrame:
-    """The shared supplier co-occurrence backbone (graph_triangle_count
-    stages 1-2): df-capped bipartite pairs -> global top-K edges.
+def _backbone(t) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The shared supplier co-occurrence backbone as _BACKBONE_CTE's
+    (edges, adj, deg): graph_triangle_count stages 1-2 (df-capped
+    bipartite pairs -> global top-K (u, v) edges), both directions as
+    (node, nbr), and (node, d BIGINT) degrees.
 
-    r14 optimization round: `bip` is localCheckpoint-materialized —
-    the co-occurrence self-join references it on BOTH sides, so the
-    lineitem scan + distinct + df-cap window otherwise executes twice
-    per backbone build (value-identical; the pair space and top-K are
-    unchanged)."""
+    Both materializations live here, so callers add none. `bip` is
+    localCheckpointed because the co-occurrence self-join reads it on
+    BOTH sides (else the lineitem scan + distinct + df-cap window runs
+    twice per build), and the 500-row edge list because every consumer
+    reads it several times (adj's two directions, the orientation and
+    wedge joins, the is_edge flag), each of which otherwise re-ran the
+    whole backbone (r13 --all: 6.3-8.6 s per graph query)."""
     bip0 = t.lineitem.select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
     ).distinct()
@@ -1398,9 +1382,78 @@ def _backbone_edges(t) -> DataFrame:
         .groupBy(F.col("ba.s").alias("u"), F.col("bb.s").alias("v"))
         .agg(F.count(F.lit(1)).alias("shared"))
     )
-    return pairs.orderBy(
-        F.col("shared").desc(), "u", "v"
-    ).limit(TRIANGLE_BACKBONE).select("u", "v")
+    edges = (
+        pairs.orderBy(F.col("shared").desc(), "u", "v")
+        .limit(TRIANGLE_BACKBONE)
+        .select("u", "v")
+        .localCheckpoint()
+    )
+    adj = edges.select(
+        F.col("u").alias("node"), F.col("v").alias("nbr")
+    ).unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
+    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    return edges, adj, deg
+
+
+def _wedges(adj: DataFrame) -> DataFrame:
+    """(z, u, v) for every pair u < v of z's neighbours: the wedge
+    self-join of the common-neighbour link scores (_BACKBONE_CTE's
+    `adj a JOIN adj b ON a.node = b.node AND a.nbr < b.nbr`)."""
+    a = adj.alias("a")
+    b = adj.alias("b")
+    return a.join(
+        b,
+        (F.col("a.node") == F.col("b.node")) & (F.col("a.nbr") < F.col("b.nbr")),
+    ).select(
+        F.col("a.node").alias("z"),
+        F.col("a.nbr").alias("u"),
+        F.col("b.nbr").alias("v"),
+    )
+
+
+def _flag_edges(pairs: DataFrame, edges: DataFrame, *cols) -> DataFrame:
+    """`pairs`' (u, v, *cols) plus is_edge (the pair is a backbone
+    edge), ordered by (u, v): the link scores' last step."""
+    e = edges.select("u", "v", F.lit(True).alias("is_edge0"))
+    return (
+        pairs.join(F.broadcast(e), ["u", "v"], "left")
+        .select(
+            "u",
+            "v",
+            *cols,
+            F.coalesce("is_edge0", F.lit(False)).alias("is_edge"),
+        )
+        .orderBy("u", "v")
+    )
+
+
+def _common_neighbour_score(
+    spark: SparkSession, sf_dir: str, term, name: str, min_degree: int = 0
+) -> DataFrame:
+    """(u, v, n_common, `name`, is_edge) over the backbone's wedges:
+    each common neighbour z of degree d >= `min_degree` adds the
+    integer micro-unit `term` (a column over d), the pair sums them and
+    divides by 1e6 once."""
+    edges, adj, deg = _backbone(load(spark, sf_dir))
+    terms = _wedges(adj).join(
+        F.broadcast(deg.select(F.col("node").alias("z"), "d")), "z"
+    )
+    if min_degree:
+        terms = terms.where(F.col("d") >= min_degree)
+    scored = (
+        terms.select("u", "v", term.alias("term_u"))
+        .groupBy("u", "v")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_common"),
+            F.sum("term_u").cast("bigint").alias("score_u"),
+        )
+    )
+    return _flag_edges(
+        scored,
+        edges,
+        "n_common",
+        F.round(F.col("score_u") / 1e6, 6).alias(name),
+    )
 
 
 _ADAMIC_ADAR_ORACLE = f"""
@@ -1445,48 +1498,12 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     doctrine — the sum is order-free integer arithmetic), one final
     /1e6 presentation division; deg >= 2 holds for every common
     neighbor by definition, so ln(d) > 0."""
-    t = load(spark, sf_dir)
-    edges = _backbone_edges(t).localCheckpoint()
-    adj = edges.select(
-        F.col("u").alias("node"), F.col("v").alias("nbr")
-    ).unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    a = adj.alias("a")
-    b = adj.alias("b")
-    terms = (
-        a.join(
-            b,
-            (F.col("a.node") == F.col("b.node"))
-            & (F.col("a.nbr") < F.col("b.nbr")),
-        )
-        .join(
-            F.broadcast(deg.select(F.col("node").alias("z"), "d")),
-            F.col("a.node") == F.col("z"),
-        )
-        .where(F.col("d") >= 2)
-        .select(
-            F.col("a.nbr").alias("u"),
-            F.col("b.nbr").alias("v"),
-            F.floor(1_000_000.0 / F.log(F.col("d"))).cast("bigint").alias(
-                "term_u"
-            ),
-        )
-    )
-    scored = terms.groupBy("u", "v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_common"),
-        F.sum("term_u").cast("bigint").alias("aa_u"),
-    )
-    e = edges.select("u", "v", F.lit(True).alias("is_edge0"))
-    return (
-        scored.join(F.broadcast(e), ["u", "v"], "left")
-        .select(
-            "u",
-            "v",
-            "n_common",
-            F.round(F.col("aa_u") / 1e6, 6).alias("adamic_adar"),
-            F.coalesce("is_edge0", F.lit(False)).alias("is_edge"),
-        )
-        .orderBy("u", "v")
+    return _common_neighbour_score(
+        spark,
+        sf_dir,
+        F.floor(1_000_000.0 / F.log(F.col("d"))).cast("bigint"),
+        "adamic_adar",
+        min_degree=2,
     )
 
 
@@ -1532,12 +1549,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold frame against the K-edge frame — never data-sized; phi
     is one exact-integer division rounded 6 dp; thresholds with fewer
     than 2 qualifying nodes drop (density undefined)."""
-    t = load(spark, sf_dir)
-    edges = _backbone_edges(t).localCheckpoint()
-    adj = edges.select(
-        F.col("u").alias("node"), F.col("v").alias("nbr")
-    ).unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    edges, _, deg = _backbone(load(spark, sf_dir))
     ks = deg.select(F.col("d").alias("k")).distinct()
     nk = (
         F.broadcast(ks)
@@ -1610,12 +1622,7 @@ def graph_avg_neighbor_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio entering doubles in a single floored division (1e-6
     lattice). No window, no iteration; two shuffles on the top-K
     bounded backbone."""
-    t = load(spark, sf_dir)
-    edges = _backbone_edges(t).localCheckpoint()
-    adj = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
+    _, adj, deg = _backbone(load(spark, sf_dir))
     nbrsum = (
         adj.join(
             deg.select(F.col("node").alias("nbr"), F.col("d").alias("dn")),
@@ -1680,13 +1687,11 @@ _KATZ_ORACLE = (
     + _EDGES_SQL
     + f",\n    k0 AS (SELECT node, CAST({KATZ_BASE} AS BIGINT) AS ku"
     " FROM nodes),"
-    + _katz_step_sql("k0", "k1")
-    + ","
-    + _katz_step_sql("k1", "k2")
-    + ","
-    + _katz_step_sql("k2", "k3")
-    + """
-    SELECT node, ku AS katz_units FROM k3
+    + ",".join(
+        _katz_step_sql(f"k{k}", f"k{k + 1}") for k in range(KATZ_ITERS)
+    )
+    + f"""
+    SELECT node, ku AS katz_units FROM k{KATZ_ITERS}
     """
 )
 
@@ -1764,45 +1769,8 @@ def graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the top-K bounded backbone; 1/d floors to integer micro-units
     via exact integer division 1000000 // d (no float in the fold at
     all), per-pair sums are exact integer folds, one final /1e6."""
-    t = load(spark, sf_dir)
-    edges = _backbone_edges(t).localCheckpoint()
-    adj = edges.select(
-        F.col("u").alias("node"), F.col("v").alias("nbr")
-    ).unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    a = adj.alias("a")
-    b = adj.alias("b")
-    terms = (
-        a.join(
-            b,
-            (F.col("a.node") == F.col("b.node"))
-            & (F.col("a.nbr") < F.col("b.nbr")),
-        )
-        .join(
-            F.broadcast(deg.select(F.col("node").alias("z"), "d")),
-            F.col("a.node") == F.col("z"),
-        )
-        .select(
-            F.col("a.nbr").alias("u"),
-            F.col("b.nbr").alias("v"),
-            F.expr("1000000 div d").alias("term_u"),
-        )
-    )
-    scored = terms.groupBy("u", "v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_common"),
-        F.sum("term_u").cast("bigint").alias("ra_u"),
-    )
-    e = edges.select("u", "v", F.lit(True).alias("is_edge0"))
-    return (
-        scored.join(F.broadcast(e), ["u", "v"], "left")
-        .select(
-            "u",
-            "v",
-            "n_common",
-            F.round(F.col("ra_u") / 1e6, 6).alias("resource_allocation"),
-            F.coalesce("is_edge0", F.lit(False)).alias("is_edge"),
-        )
-        .orderBy("u", "v")
+    return _common_neighbour_score(
+        spark, sf_dir, F.expr("1000000 div d"), "resource_allocation"
     )
 
 
@@ -1840,45 +1808,23 @@ def graph_preferential_attachment(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale/determinism: one wedge self-join on the top-K bounded
     backbone for candidates, two broadcast degree joins; the score is
     an exact integer product of bounded degrees — no floats anywhere."""
-    t = load(spark, sf_dir)
-    edges = _backbone_edges(t).localCheckpoint()
-    adj = edges.select(
-        F.col("u").alias("node"), F.col("v").alias("nbr")
-    ).unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    a = adj.alias("a")
-    b = adj.alias("b")
-    wedge = (
-        a.join(
-            b,
-            (F.col("a.node") == F.col("b.node"))
-            & (F.col("a.nbr") < F.col("b.nbr")),
-        )
-        .select(F.col("a.nbr").alias("u"), F.col("b.nbr").alias("v"))
-        .distinct()
+    edges, adj, deg = _backbone(load(spark, sf_dir))
+    wedge = _wedges(adj).select("u", "v").distinct()
+    scored = wedge.join(
+        F.broadcast(deg.select(F.col("node").alias("u"), F.col("d").alias("deg_u"))),
+        "u",
+    ).join(
+        F.broadcast(deg.select(F.col("node").alias("v"), F.col("d").alias("deg_v"))),
+        "v",
     )
-    e = edges.select("u", "v", F.lit(True).alias("is_edge0"))
-    return (
-        wedge.join(
-            F.broadcast(deg.select(F.col("node").alias("u"), F.col("d").alias("deg_u"))),
-            "u",
-        )
-        .join(
-            F.broadcast(deg.select(F.col("node").alias("v"), F.col("d").alias("deg_v"))),
-            "v",
-        )
-        .join(F.broadcast(e), ["u", "v"], "left")
-        .select(
-            "u",
-            "v",
-            "deg_u",
-            "deg_v",
-            (F.col("deg_u") * F.col("deg_v")).cast("bigint").alias(
-                "preferential_attachment"
-            ),
-            F.coalesce("is_edge0", F.lit(False)).alias("is_edge"),
-        )
-        .orderBy("u", "v")
+    return _flag_edges(
+        scored,
+        edges,
+        "deg_u",
+        "deg_v",
+        (F.col("deg_u") * F.col("deg_v")).cast("bigint").alias(
+            "preferential_attachment"
+        ),
     )
 
 
@@ -1956,34 +1902,24 @@ def graph_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: no graph surface in the reference ETL (child.py) — Part
     C extension."""
-    t = load(spark, sf_dir)
-    edges = _backbone_edges(t).localCheckpoint()
-    adj = edges.select(
-        F.col("u").alias("node"), F.col("v").alias("nbr")
-    ).unionAll(
-        edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    )
+    _, adj, _ = _backbone(load(spark, sf_dir))
     d = adj.select(
         F.col("node").alias("pu"), F.col("nbr").alias("pv"), F.lit(1).alias("d")
     )
-    # r14 optimization round: per-round localCheckpoint — each round
-    # references the previous d frame TWICE (frontier extension + the
-    # min-union), so the lazy lineage re-executed earlier rounds 2^k
-    # times; the checkpointed loop relaxes identically. adj is
+
+    # Each round reads the previous d frame twice (frontier extension +
+    # the min-union), hence catalog.iterate's barrier. adj is
     # backbone-bounded, so broadcasting it keeps every extension
     # shuffle pair-frame-sized.
-    for _ in range(CLOSENESS_H - 1):
+    def step(d: DataFrame, _: int) -> DataFrame:
         ext = (
             d.join(F.broadcast(adj), d.pv == adj.node)
             .where(F.col("nbr") != F.col("pu"))
             .select("pu", F.col("nbr").alias("pv"), (F.col("d") + 1).alias("d"))
         )
-        d = (
-            d.unionByName(ext)
-            .groupBy("pu", "pv")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint()
-        )
+        return d.unionByName(ext).groupBy("pu", "pv").agg(F.min("d").alias("d"))
+
+    d, _ = iterate(d, step, CLOSENESS_H - 1)
     term_u = F.floor(1_000_000.0 / F.col("d")).cast("bigint")
     return (
         d.groupBy(F.col("pu").alias("node"))

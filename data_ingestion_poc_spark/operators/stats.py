@@ -1905,16 +1905,15 @@ _MARKOV_STAT_ORACLE = (
                AS mass
       FROM states
     ),"""
-    + _markov_step_sql("d0", "d1")
-    + ","
-    + _markov_step_sql("d1", "d2")
-    + ","
-    + _markov_step_sql("d2", "d3")
-    + """
+    + ",".join(
+        _markov_step_sql(f"d{k}", f"d{k + 1}")
+        for k in range(MARKOV_POWER_ITERS)
+    )
+    + f"""
     SELECT state, mass AS mass_units,
-           ROUND(mass / CAST((SELECT SUM(mass) FROM d3) AS DOUBLE), 6)
+           ROUND(mass / CAST((SELECT SUM(mass) FROM d{MARKOV_POWER_ITERS}) AS DOUBLE), 6)
              AS stationary_share
-    FROM d3
+    FROM d{MARKOV_POWER_ITERS}
 """
 )
 

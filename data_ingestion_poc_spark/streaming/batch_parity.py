@@ -1543,8 +1543,12 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, no shuffle until the k-row sort. The checkpoint is
     keyed by the fixture's identity (path digest + mtime) — a
     regenerated fixture can never pair with stale state (the
-    scan_partition_pruned staging doctrine) — and the AvailableNow
-    query ALWAYS runs (a no-op when the checkpoint is current):
+    scan_partition_pruned staging doctrine) — and by the session's
+    applicationId, so each process aggregates the stream once itself
+    rather than finding a checkpoint an earlier process left in the
+    temp dir (whose AvailableNow run then reads nothing, and whose
+    plan shows no state operator). The AvailableNow query ALWAYS runs
+    (a no-op when the checkpoint is current):
     skipping it in a fresh session leaves no StateStoreCoordinator
     RPC endpoint on the driver and the state read dies with
     CANNOT_LOAD_STATE_STORE (found the hard way at sf0.1 — the state
@@ -1559,7 +1563,8 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = os.path.join(sf_dir, "documents.parquet")
     ident = hashlib.md5(
-        f"{os.path.abspath(src)}_{os.stat(src).st_mtime_ns}".encode()
+        f"{os.path.abspath(src)}_{os.stat(src).st_mtime_ns}"
+        f"_{spark.sparkContext.applicationId}".encode()
     ).hexdigest()[:12]
     ck = os.path.join(
         tempfile.gettempdir(), f"dip_state_reader_ck_{ident}"

@@ -4,10 +4,37 @@ classifies every key by the deterministic evolution rules."""
 
 from __future__ import annotations
 
-from data_ingestion_poc_spark import registry
+import ast
+import glob
+import inspect
+import os
+
+from data_ingestion_poc_spark import catalog, registry
 from data_ingestion_poc_spark.operators.graph import PAGERANK_ITERS, TOTAL_MASS
 
 from conftest import SF_SMOKE
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _package_trees():
+    for path in glob.glob(
+        os.path.join(REPO, "data_ingestion_poc_spark", "**", "*.py"),
+        recursive=True,
+    ):
+        with open(path) as f:
+            yield os.path.relpath(path, REPO), ast.parse(f.read())
+
+
+def _local_checkpoints(node: ast.AST):
+    """The `<x>.localCheckpoint()` calls under `node`."""
+    return [
+        n
+        for n in ast.walk(node)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "localCheckpoint"
+    ]
 
 
 def test_pagerank_mass_and_hub_on_planted_star(spark, tmp_path):
@@ -127,3 +154,61 @@ def test_neighbor_jaccard_on_planted_bipartite(spark, tmp_path):
     assert (r["supp_a"], r["supp_b"]) == (1, 2)
     assert (r["n_common"], r["n_a"], r["n_b"]) == (2, 3, 3)
     assert abs(r["jaccard"] - 0.5) < 1e-9
+
+
+def test_one_round_barrier_in_the_package():
+    """Regrowth guard: a `.localCheckpoint()` inside a for/while body is
+    a hand-written round barrier, and the package has exactly one —
+    catalog.iterate's. Run the rounds through it instead of writing a
+    loop."""
+    found = [
+        (path, cp.lineno)
+        for path, tree in _package_trees()
+        for loop in ast.walk(tree)
+        if isinstance(loop, (ast.For, ast.While))
+        for stmt in loop.body + loop.orelse
+        for cp in _local_checkpoints(stmt)
+    ]
+    lines, start = inspect.getsourcelines(catalog.iterate)
+    own = {
+        ("data_ingestion_poc_spark/catalog.py", line)
+        for line in range(start, start + len(lines))
+    }
+    stray = [f"{path}:{line}" for path, line in found if (path, line) not in own]
+    assert stray == [], f"per-round localCheckpoint outside catalog.iterate: {stray}"
+    assert len(found) == 1
+
+
+def _is_backbone_call(node: ast.AST) -> bool:
+    if isinstance(node, ast.Subscript):
+        node = node.value
+    return isinstance(node, ast.Call) and (
+        getattr(node.func, "id", None) == "_backbone"
+        or getattr(node.func, "attr", None) == "_backbone"
+    )
+
+
+def test_backbone_is_materialized_once():
+    """Regrowth guard: graph._backbone returns its edges already
+    checkpointed, so no caller checkpoints a `_backbone(...)` result
+    again, directly or through a name bound to it."""
+    found = []
+    for path, tree in _package_trees():
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            bound = {
+                n.id
+                for stmt in ast.walk(fn)
+                if isinstance(stmt, ast.Assign) and _is_backbone_call(stmt.value)
+                for target in stmt.targets
+                for n in ast.walk(target)
+                if isinstance(n, ast.Name)
+            }
+            found += [
+                f"{path}:{cp.lineno}"
+                for cp in _local_checkpoints(fn)
+                if _is_backbone_call(cp.func.value)
+                or getattr(cp.func.value, "id", None) in bound
+            ]
+    assert found == [], f"re-checkpointed backbone: {found}"

@@ -23,15 +23,12 @@ import statistics
 import pytest
 
 from data_ingestion_poc_spark import registry
+from conftest import module_spark
 
 BASE_TS = datetime.datetime(2024, 1, 1, 12, 0, 0)
 
 
-@pytest.fixture(scope="session")
-def spark():
-    from data_ingestion_poc_spark.session import get_spark
-
-    return get_spark(shuffle_partitions=4)
+spark = module_spark(shuffle_partitions=4)
 
 
 def _write_events(spark, tmp_path, rows):

@@ -13,13 +13,10 @@ from collections import Counter
 import pytest
 
 from data_ingestion_poc_spark import registry
+from conftest import module_spark
 
 
-@pytest.fixture(scope="session")
-def spark():
-    from data_ingestion_poc_spark.session import get_spark
-
-    return get_spark(shuffle_partitions=4)
+spark = module_spark(shuffle_partitions=4)
 
 
 def _write_docs(spark, tmp_path, docs):

@@ -7,16 +7,11 @@ from __future__ import annotations
 
 import datetime
 
-import pytest
-
 from data_ingestion_poc_spark import registry
+from conftest import module_spark
 
 
-@pytest.fixture(scope="session")
-def spark():
-    from data_ingestion_poc_spark.session import get_spark
-
-    return get_spark(shuffle_partitions=4)
+spark = module_spark(shuffle_partitions=4)
 
 
 def _write_events(spark, tmp_path, rows):

@@ -13,15 +13,12 @@ import math
 import pytest
 
 from data_ingestion_poc_spark import registry
+from conftest import module_spark
 
 SF001 = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="session")
-def spark():
-    from data_ingestion_poc_spark.session import get_spark
-
-    return get_spark(shuffle_partitions=4)
+spark = module_spark(shuffle_partitions=4)
 
 
 def _write_events(spark, tmp_path, rows):

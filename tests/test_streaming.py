@@ -10,6 +10,7 @@ import glob
 import inspect
 import os
 
+import conftest
 import pytest
 from pyspark.sql import functions as F
 
@@ -196,8 +197,7 @@ def test_stream_state_partitions_follow_the_cores(spark, sf_dir):
     """A new checkpoint's stateful operators run on
     min(shuffle partitions, defaultParallelism) state stores, read from
     the progress finish_stream keeps, and the session's batch knob reads
-    its own value again once the streams are done. (The shared session
-    reads 8, or 4 after a module fixture re-asked for it with 4.)"""
+    its own value again once the streams are done."""
     before = spark.conf.get(SHUFFLE_PARTITIONS)
     start = len(core.STREAM_PROGRESS)
     for name in ("stream_tumbling_agg", "stream_dedup"):
@@ -223,6 +223,14 @@ def test_stream_start_error_restores_conf(spark, sf_dir):
     with pytest.raises(Exception, match="(?i)complete"):
         core.run_available_now(sdf, "complete")
     assert spark.conf.get(SHUFFLE_PARTITIONS) == before
+
+
+def test_modules_leave_the_suite_shuffle_partitions(spark):
+    """A module that wants its own shuffle-partition count scopes it
+    (conftest.module_spark) instead of re-asking get_spark for it, so a
+    module that runs after the 4-partition ones still reads the suite's
+    count."""
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == str(conftest.SHUFFLE_PARTITIONS)
 
 
 def test_scoped_conf_unsets_what_was_unset(spark):
